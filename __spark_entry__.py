@@ -2858,6 +2858,20 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk_indexed(queries, root, ANN_K, n_probe=16)
 
 
+STREAM_TIMEOUT_S = 300
+
+
+def _await_drained(q) -> None:
+    """Block until an availableNow stream has drained its source; a
+    stream still running after ``STREAM_TIMEOUT_S`` is stopped and
+    raises, so a query never reads a partly drained sink."""
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} not drained after {STREAM_TIMEOUT_S}s"
+        )
+
+
 def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming NEAR-dup: the stateful LSH band registry
     (streaming/neardup.py) run availableNow over the duplicated corpus
@@ -2893,7 +2907,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return (
         spark.read.parquet(sink)
         .groupBy("doc_id")
@@ -2932,7 +2946,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return spark.read.parquet(sink).select("content_hash").distinct()
 
 
@@ -2971,7 +2985,7 @@ def q_stream_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_hex_{uuid.uuid4().hex[:8]}"
     q = run_to_sink(hex_counts_windowed(stream, HEX_SIZE), ckpt, query_name=name)
-    q.awaitTermination(300)
+    _await_drained(q)
     return spark.table(name)
 
 
@@ -3050,7 +3064,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"stream_topk_{uuid.uuid4().hex[:8]}"
     q = run_to_sink(domain_counts_windowed(stream), ckpt, query_name=name)
-    q.awaitTermination(300)
+    _await_drained(q)
     w = Window.partitionBy("win_start_s").orderBy(
         F.col("n").desc(), F.col("domain").asc()
     )

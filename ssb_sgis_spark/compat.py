@@ -185,8 +185,10 @@ def k_nearest_neighbors(
 ) -> pd.DataFrame:
     """The reference's array-level kNN (``neighbors.py:385-440``):
     (n, 2) coordinate arrays in, tidy (i, j, distance, k) frame out,
-    ties on (distance, j).  Driver-side numpy — the distributed paths
-    are get_k_nearest_neighbors / knn_cellwise."""
+    ties on (distance, j).  Driver-side numpy — the distributed path is
+    get_k_nearest_neighbors (broadcast, or the ring-escalation scale
+    path ``knn_cellwise`` / ``knn_cellwise_haversine`` on big right
+    sides)."""
     from .operators.knn import _topk_block
 
     fa = np.asarray(from_array, dtype=np.float64)

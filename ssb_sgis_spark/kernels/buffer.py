@@ -55,13 +55,6 @@ def _segment_rect(p1: np.ndarray, p2: np.ndarray, r: float) -> np.ndarray | None
     return ring
 
 
-def _ccw(ring: np.ndarray) -> np.ndarray:
-    x, y = ring[:, 0], ring[:, 1]
-    if 0.5 * np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]) < 0:
-        return ring[::-1]
-    return ring
-
-
 def buffer_parts(
     parts: list[list[np.ndarray]],
     geom_type: int,

@@ -61,17 +61,6 @@ def bounds(ga: GeomArray) -> np.ndarray:
     )
 
 
-def total_bounds(ga: GeomArray) -> tuple[float, float, float, float]:
-    if len(ga.coords) == 0:
-        return (np.nan, np.nan, np.nan, np.nan)
-    return (
-        float(ga.coords[:, 0].min()),
-        float(ga.coords[:, 1].min()),
-        float(ga.coords[:, 0].max()),
-        float(ga.coords[:, 1].max()),
-    )
-
-
 # --------------------------------------------------------------------- area
 def _ring_signed_areas(ga: GeomArray) -> np.ndarray:
     """Shoelace signed area per ring (R,). Vectorized over all rings."""
@@ -172,37 +161,6 @@ def centroid(ga: GeomArray) -> np.ndarray:
 
 
 # ------------------------------------------------------------ ring plumbing
-def polygon_edge_table(ga: GeomArray, row_ids: np.ndarray | None = None):
-    """Flatten polygon batch into an edge table for vectorized PIP.
-
-    Returns (edge_geom_id, x1, y1, x2, y2) — one row per directed edge of
-    every ring (exterior and holes; crossing-parity PIP needs no
-    distinction).  ``edge_geom_id`` maps each edge back to its geometry row
-    (or to ``row_ids[g]`` when given).
-    """
-    xs1, ys1, xs2, ys2, gid = [], [], [], [], []
-    for g in range(len(ga)):
-        rid = g if row_ids is None else row_ids[g]
-        for ring in ga.geom_rings(g):
-            if len(ring) < 2:
-                continue
-            xs1.append(ring[:-1, 0])
-            ys1.append(ring[:-1, 1])
-            xs2.append(ring[1:, 0])
-            ys2.append(ring[1:, 1])
-            gid.append(np.full(len(ring) - 1, rid, dtype=np.int64))
-    if not xs1:
-        z = np.empty(0)
-        return np.empty(0, dtype=np.int64), z, z, z, z
-    return (
-        np.concatenate(gid),
-        np.concatenate(xs1),
-        np.concatenate(ys1),
-        np.concatenate(xs2),
-        np.concatenate(ys2),
-    )
-
-
 def points_in_polygon(
     px: np.ndarray,
     py: np.ndarray,
@@ -335,16 +293,6 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     dlon = np.radians(lon2 - lon1)
     a = np.sin(dlat / 2) ** 2 + np.cos(rl1) * np.cos(rl2) * np.sin(dlon / 2) ** 2
     return 2 * 6371008.8 * np.arcsin(np.sqrt(a))
-
-
-# ------------------------------------------------------------------ explode
-def explode_parts(ga: GeomArray):
-    """Yield (geom_row, part_index, rings) for every single part — the
-    kernel behind make_all_singlepart (``geometry_types.py:10-22``)."""
-    for g in range(len(ga)):
-        parts = ga.geom_parts(g)
-        for i, rings in enumerate(parts):
-            yield g, i, rings
 
 
 # --------------------------------------------------- simplify / segmentize

@@ -335,10 +335,6 @@ def _fmt(v: float) -> str:
     return repr(float(v))
 
 
-def wkt_point(x: float, y: float) -> str:
-    return f"POINT ({_fmt(x)} {_fmt(y)})"
-
-
 def parse_wkt(wkt: str) -> bytes:
     """Minimal WKT -> WKB for tests/fixtures (POINT/LINESTRING/POLYGON/MULTI*)."""
     s = wkt.strip()

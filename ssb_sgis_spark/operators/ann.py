@@ -283,21 +283,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
     return rng.randn(n_planes, dim)
 
 
-def _bucket_col(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id against fixed hyperplanes — native expressions
-    (one aggregate per plane over the array column).  Kept for low-dim /
-    few-plane cases; the scale path is :func:`_bucket_udf`."""
-    bits = []
-    for i, p in enumerate(planes):
-        lits = F.array(*[F.lit(float(v)) for v in p])
-        d = _dot(vec, lits)
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
-
-
 def _bucket_udf(planes: np.ndarray):
     """Arrow-batched hyperplane bucketing: one numpy matmul per batch
     ((B, dim) @ (dim, n_planes)) instead of n_planes interpreted

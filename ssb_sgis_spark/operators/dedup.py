@@ -139,17 +139,6 @@ def shingles_sql(t: str = "text", k: int = DEFAULT_SHINGLE_K) -> str:
     )
 
 
-def minhash_cols(text: Column, n_hashes: int = DEFAULT_N_HASHES, k: int = DEFAULT_SHINGLE_K) -> list[Column]:
-    """One md5-hex minimum per seed — the MinHash signature, shuffle-free."""
-    sh = shingles_col(text, k)
-    return [
-        F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s)))
-        ).alias(f"mh{seed}")
-        for seed in range(n_hashes)
-    ]
-
-
 def minhash_sql_exprs(t: str = "text", n_hashes: int = DEFAULT_N_HASHES, k: int = DEFAULT_SHINGLE_K) -> list[str]:
     sh = shingles_sql(t, k)
     return [
@@ -171,37 +160,6 @@ def minhash_array_col(
     seeds = F.array(*[F.lit(f"{s}:") for s in range(n_hashes)])
     return F.transform(
         seeds, lambda s: F.array_min(F.transform(sh, lambda x: F.md5(F.concat(s, x))))
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = DEFAULT_N_HASHES,
-    k: int = DEFAULT_SHINGLE_K,
-) -> DataFrame:
-    """(id, mh array<string>) signatures, fully relational:
-    explode(shingles) × explode(seeds) → codegen md5 → two-level min-agg
-    (map-side partial combine) → per-doc seed-ordered array.
-
-    ~100x faster than evaluating the nested higher-order-function
-    expression (HOF lambdas run interpreted per element — measured
-    minutes vs seconds at sf0.1), and the shuffle is the dedup-friendly
-    shape: rows are (doc, seed, hash), partial-aggregated before the exchange.
-    Signature VALUES are identical (same seed prefixes, same md5)."""
-    mins = minhash_long(df, id_col, text_col, n_hashes, k)
-    # seed zero-padded into the collected strings so a plain string sort
-    # recovers seed order (structs + transform() in the final agg drop the
-    # fused stage out of codegen — measured 5x slower)
-    tagged = mins.select(
-        F.col(id_col),
-        F.concat(F.lpad(F.col("_seed").cast("string"), 2, "0"), F.lit("~"), F.col("_mh")).alias("_t"),
-    )
-    return tagged.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list("_t")), lambda s: F.substring(s, 4, 32)
-        ).alias("mh")
     )
 
 

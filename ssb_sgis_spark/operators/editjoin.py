@@ -16,8 +16,10 @@ shift unedited characters k positions).  So:
 * index side: each key emits its ``k+1`` exact segments keyed by
   ``(segment_id, content)``;
 * probe side: each key emits every substring of segment length starting
-  within ``±k`` of that segment's home position — ``(k+1)·(2k+1)``
-  probe keys per row (15 at k=2), a CONSTANT fan-out;
+  within ``±k`` of that segment's home position — at most
+  ``(k+1)·(2k+1)`` probe keys per row (15 at k=2), fewer where the
+  shift window of an edge segment is clamped to the key; a bounded
+  fan-out;
 * one equi-join on ``(segment_id, content)`` yields candidates; the
   exact ``levenshtein() <= k`` verify (native JVM expression) runs only
   on candidates, and only id pairs are deduped — strings cross the wire

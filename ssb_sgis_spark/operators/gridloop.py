@@ -17,20 +17,8 @@ them as context without emitting them.
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def with_cell(df: DataFrame, gridsize: float, x_col="x", y_col="y", out="cell") -> DataFrame:
-    """Home cell id (ix, iy packed into one long) — native arithmetic."""
-    ix = F.floor(F.col(x_col) / F.lit(float(gridsize))).cast("long")
-    iy = F.floor(F.col(y_col) / F.lit(float(gridsize))).cast("long")
-    return df.withColumn(out, ix * F.lit(1 << 21) + iy)
 
 
 def gridloop(

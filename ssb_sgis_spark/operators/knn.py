@@ -10,12 +10,16 @@ Physical strategies:
   scan → mapInPandas → (optional) final filter, so it scales linearly in
   the left (10^12-page) side and with executor count.
 
-* **cell-partitioned kNN** (both sides huge): left and right are bucketed
-  into quadtree cells; stage 1 joins each left cell to its own + ring-1
-  right cells and computes local top-k; rows whose kth distance exceeds
-  the ring guarantee escalate to a wider ring (ring expansion, mirrors
-  the reference's two-stage candidate widening).  Implemented in
-  :func:`knn_cellwise` for the scale path.
+* **cell-partitioned kNN** (both sides huge): one ring-escalation driver,
+  :func:`_knn_rings`, over a :class:`CellGrid` that hides the grid and
+  the metric.  Left and right are bucketed into cells; round 1 joins
+  each left cell to its own + ring-1 right cells and computes local
+  top-k; rows whose kth distance exceeds the grid's proof bound escalate
+  to a wider ring (ring expansion, mirrors the reference's two-stage
+  candidate widening), and the residue falls to a distributed brute
+  pass.  Two grids plug in: planar quadtree cells with Euclidean
+  distance (:func:`knn_cellwise`), and wrap-aware lon/lat cells with
+  great-circle metres (``knn_geo.knn_cellwise_haversine``).
 
 Determinism / parity: ties broken by ascending neighbor id (stable
 argsort over an id-sorted cloud); identical points ARE neighbors
@@ -26,19 +30,14 @@ argsort over an id-sorted cloud); identical points ARE neighbors
 
 from __future__ import annotations
 
+from functools import partial, reduce
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-from ..cells import cell_of_xy_np
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 
 def _collect_right(right: DataFrame, id_col: str, x_col: str, y_col: str):
@@ -142,58 +141,52 @@ def get_k_nearest_neighbors(
 
     Physical routing: right sides up to ``broadcast_threshold`` rows use
     the broadcast block kernel; bigger right sides route through the
-    cell-partitioned :func:`knn_cellwise` scale path (ring escalation,
-    no broadcast of the cloud) at a resolution picked from the right
+    cell-partitioned scale path (ring escalation, no broadcast of the
+    cloud) — :func:`knn_cellwise`, or ``knn_geo.knn_cellwise_haversine``
+    for ``metric="haversine"`` — at a cell size picked from the right
     side's density.
     """
-    spark = left.sparkSession
     if metric not in ("euclidean", "haversine"):
         raise ValueError(f"unknown metric {metric!r}")
-    n_right_est = right.count()
-    if metric == "haversine" and n_right_est > broadcast_threshold:
-        # lon/lat cellwise path with the spherical per-point proof bound
-        # (operators/knn_geo.py) — exact on the R=6371008.8 sphere,
-        # dateline-wrapping halos, polar rows degrade to the brute pass
-        from ssb_sgis_spark.operators.knn_geo import knn_cellwise_haversine
-
-        if strict and k > n_right_est:
-            raise ValueError(f"k={k} > n_right={n_right_est} with strict=True")
-        out = knn_cellwise_haversine(
-            left, right, min(k, n_right_est),
-            cell_deg=_auto_geo_cell_deg(right, n_right_est, k, right_x, right_y),
-            left_id=left_id, left_x=left_x, left_y=left_y,
-            right_id=right_id, right_x=right_x, right_y=right_y,
-            n_right=n_right_est,
-        )
-        if max_distance is not None:
-            out = out.filter(F.col("distance") <= max_distance)
-        return out
-    if n_right_est > broadcast_threshold:
-        if strict and k > n_right_est:
-            raise ValueError(f"k={k} > n_right={n_right_est} with strict=True")
-        res = _auto_knn_res(right, n_right_est, k, right_x, right_y)
-        out = knn_cellwise(
-            left, right, min(k, n_right_est), res,
-            left_id=left_id, left_x=left_x, left_y=left_y,
-            right_id=right_id, right_x=right_x, right_y=right_y,
-            n_right=n_right_est,
-        )
-        if max_distance is not None:
-            out = out.filter(F.col("distance") <= max_distance)
-        return out
-    rid, rx, ry = _collect_right(right, right_id, right_x, right_y)
-    n_right = len(rid)
+    n_right = right.count()
     if strict and k > n_right:
         raise ValueError(f"k={k} > n_right={n_right} with strict=True")
     k_eff = min(k, n_right)
+    cols = dict(
+        left_id=left_id, left_x=left_x, left_y=left_y,
+        right_id=right_id, right_x=right_x, right_y=right_y,
+    )
+    if n_right <= broadcast_threshold:
+        block = _topk_block if metric == "euclidean" else _topk_block_haversine
+        out = _knn_broadcast(left, right, k_eff, block, **cols)
+    else:
+        if metric == "haversine":
+            from .knn_geo import knn_cellwise_haversine as cellwise
+
+            cell = _auto_geo_cell_deg(right, n_right, k, right_x, right_y)
+        else:
+            cellwise = knn_cellwise
+            cell = _auto_knn_res(right, n_right, k, right_x, right_y)
+        out = cellwise(left, right, k_eff, cell, **cols, n_right=n_right)
+    if max_distance is not None:
+        out = out.filter(F.col("distance") <= max_distance)
+    return out
+
+
+def _knn_broadcast(
+    left, right, k: int, block, *, left_id, left_x, left_y, right_id, right_x, right_y
+) -> DataFrame:
+    """The broadcast path: collect + broadcast the id-sorted right cloud,
+    score left Arrow batches against it with the numpy ``block`` kernel."""
+    spark = left.sparkSession
+    rid, rx, ry = _collect_right(right, right_id, right_x, right_y)
+    n_right = len(rid)
     bc = spark.sparkContext.broadcast((rid, rx, ry))
 
-    id_field = left.schema[left_id].dataType
-    nbr_field = right.schema[right_id].dataType
     schema = StructType(
         [
-            StructField(left_id, id_field),
-            StructField("neighbor_id", nbr_field),
+            StructField(left_id, left.schema[left_id].dataType),
+            StructField("neighbor_id", right.schema[right_id].dataType),
             StructField("distance", DoubleType()),
             StructField("knn_rank", IntegerType()),
         ]
@@ -216,29 +209,25 @@ def get_k_nearest_neighbors(
             ly = pdf[left_y].to_numpy(dtype=np.float64)
             for s in range(0, len(pdf), chunk):
                 e = s + chunk
-                block = _topk_block if metric == "euclidean" else _topk_block_haversine
-                pos, dist = block(lx[s:e], ly[s:e], rx_, ry_, k_eff)
+                pos, dist = block(lx[s:e], ly[s:e], rx_, ry_, k)
                 b = len(lx[s:e])
                 yield pd.DataFrame(
                     {
-                        left_id: np.repeat(lids[s:e], k_eff),
+                        left_id: np.repeat(lids[s:e], k),
                         "neighbor_id": rid_[pos].ravel(),
                         "distance": dist.ravel(),
-                        "knn_rank": np.tile(np.arange(1, k_eff + 1, dtype=np.int32), b),
+                        "knn_rank": np.tile(np.arange(1, k + 1, dtype=np.int32), b),
                     }
                 )
 
     # spread the CPU-bound distance kernel over every core — AQE coalesces
     # small upstream shuffles to a handful of partitions, which would cap
     # kNN parallelism at 2-3 tasks (measured 123s -> ~15s at sf0.1)
-    out = (
+    return (
         left.select(left_id, left_x, left_y)
         .repartition(spark.sparkContext.defaultParallelism)
         .mapInPandas(kernel, schema=schema)
     )
-    if max_distance is not None:
-        out = out.filter(F.col("distance") <= max_distance)
-    return out
 
 
 def knn_haversine(left: DataFrame, right: DataFrame, k: int, **kw) -> DataFrame:
@@ -284,33 +273,32 @@ def get_all_distances(
     )
 
 
-def _auto_knn_res(right, n_right: int, k: int, right_x: str, right_y: str) -> int:
-    """Cell resolution for the cellwise path: ~8k (min 64) right points
-    per cell, so a 3x3 halo nearly always proves top-k in round 1."""
-    from ..cells import DOMAIN_SIZE, MAX_RES
-
-    row = right.agg(
-        F.min(right_x), F.max(right_x), F.min(right_y), F.max(right_y)
-    ).first()
-    span = max(row[1] - row[0], row[3] - row[2], 1e-9)
-    target = max(64, 8 * k)
-    across = max(np.sqrt(n_right / target), 1.0)
-    res = int(np.ceil(np.log2(DOMAIN_SIZE * across / span)))
-    return int(np.clip(res, 4, MAX_RES))
-
-
-def _auto_geo_cell_deg(right, n_right: int, k: int, right_x: str, right_y: str) -> float:
-    """Degree cell size for the lon/lat cellwise path: same ~8k (min 64)
-    points-per-cell target as :func:`_auto_knn_res`, quantized to a
-    divisor of 360 (the wrap grid needs an integral cell count)."""
+def _cells_across(right, n_right: int, k: int, right_x: str, right_y: str):
+    """(extent of the right side, cells across it) for ~8k (min 64) right
+    points per cell, so a 3x3 halo nearly always proves top-k in round 1."""
     row = right.agg(
         F.min(right_x), F.max(right_x), F.min(right_y), F.max(right_y)
     ).first()
     # float() guards against DECIMAL columns (Spark SQL float literals
     # are decimals, so `4.0 + id/2.0` yields one)
     span = max(float(row[1]) - float(row[0]), float(row[3]) - float(row[2]), 1e-9)
-    target = max(64, 8 * k)
-    across = max(np.sqrt(n_right / target), 1.0)
+    return span, max(np.sqrt(n_right / max(64, 8 * k)), 1.0)
+
+
+def _auto_knn_res(right, n_right: int, k: int, right_x: str, right_y: str) -> int:
+    """Quadtree resolution for :func:`knn_cellwise` (see :func:`_cells_across`)."""
+    from ..cells import DOMAIN_SIZE, MAX_RES
+
+    span, across = _cells_across(right, n_right, k, right_x, right_y)
+    res = int(np.ceil(np.log2(DOMAIN_SIZE * across / span)))
+    return int(np.clip(res, 4, MAX_RES))
+
+
+def _auto_geo_cell_deg(right, n_right: int, k: int, right_x: str, right_y: str) -> float:
+    """Degree cell size for the lon/lat grid (see :func:`_cells_across`),
+    quantized to a divisor of 360 (the wrap grid needs an integral cell
+    count)."""
+    span, across = _cells_across(right, n_right, k, right_x, right_y)
     want = span / across
     # largest divisor-of-360 cell <= want (bounded stock list keeps the
     # cell count sane: >= 0.025 deg ~ 2.8 km)
@@ -322,6 +310,40 @@ def _auto_geo_cell_deg(right, n_right: int, k: int, right_x: str, right_y: str) 
 
 
 # ------------------------------------------------------------- scale path
+class CellGrid(NamedTuple):
+    """What the ring-escalation driver :func:`_knn_rings` needs to know
+    about a grid and its metric — everything else is shared.
+
+    * ``home(x, y)``: home-cell id column of a point.
+    * ``halo(df, id_col, x_col, y_col, r)``: ``df`` replicated into the
+      (2r+1)^2 ring cells around each row's home cell, as column
+      ``_cell``, at most one replica per (row, cell) — that makes every
+      (left, right) candidate pair unique per round, so no round needs a
+      dedup exchange.
+    * ``dist(lx, ly, rx, ry)``: distance column.
+    * ``bound(y, r)``: lower bound on the distance from a point at ``y``
+      to anything outside its r-ring (a row whose kth distance is within
+      it is proven exact).
+    * ``block(lx, ly, rx, ry, k)``: the numpy top-k kernel of the same
+      metric, tie-exact on (distance, column position).
+    """
+
+    home: Callable
+    halo: Callable
+    dist: Callable
+    bound: Callable
+    block: Callable
+
+
+def _ring_offsets(r: int):
+    """The (2r+1)^2 cell offsets of an r-ring, as (ox, oy) struct literals."""
+    return [
+        F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"))
+        for ox in range(-r, r + 1)
+        for oy in range(-r, r + 1)
+    ]
+
+
 def knn_cellwise(
     left: DataFrame,
     right: DataFrame,
@@ -339,55 +361,75 @@ def knn_cellwise(
     brute_work: int = 2_000_000_000,
     n_right: int | None = None,
 ) -> DataFrame:
-    """Cell-partitioned kNN for huge right sides (no broadcast), with
-    multi-round ring escalation.
+    """Cell-partitioned Euclidean kNN for huge right sides (no broadcast):
+    :func:`_knn_rings` over the quadtree cells of resolution ``res``
+    (gridbuffer-style halo exchange, reference ``bounds.py:141-168``).
+    A row is proven exact when its kth distance is <= r * cell_size:
+    anything nearer lies inside the r-ring."""
+    from ..cells import cell_size
 
-    Round 1: right rows are replicated into their cell's 3x3 halo
-    (gridbuffer-style halo exchange, reference ``bounds.py:141-168``);
-    left joins its own cell, a window takes local top-k.  A left row's
-    result is PROVEN exact when it found k neighbors and its kth distance
-    is <= ring*cell_size (anything nearer must lie inside the ring).
-    Unproven rows escalate: the (small) violator set explodes into a
-    (2r+1)^2 cell neighborhood — note the asymmetry: round 1 replicates
-    the RIGHT side (every left row needs candidates), later rounds
-    replicate the shrinking LEFT violator set — with r doubling per
-    round.  After ``max_rings`` doublings the remainder falls back to a
-    distributed brute pass: every right partition scores the broadcast
-    violators and emits a partial top-k, then one final window.
-    Ties break on (distance, neighbor_id) in every path, matching the
-    oracle's ORDER BY dist, vid.
+    s = cell_size(res)
+    grid = CellGrid(
+        home=lambda x, y: _cell_shift_col(x, y, res, F.lit(0), F.lit(0)),
+        halo=partial(_halo_replicas, res=res),
+        dist=lambda lx, ly, rx, ry: F.sqrt((lx - rx) * (lx - rx) + (ly - ry) * (ly - ry)),
+        bound=lambda y, r: F.lit(float(r) * s),
+        block=_topk_block,
+    )
+    return _knn_rings(
+        left, right, k, grid, (left_id, left_x, left_y), (right_id, right_x, right_y),
+        max_rings, brute_threshold, brute_work, n_right,
+    )
+
+
+def _knn_rings(
+    left: DataFrame,
+    right: DataFrame,
+    k: int,
+    grid: CellGrid,
+    left_cols: tuple[str, str, str],
+    right_cols: tuple[str, str, str],
+    max_rings: int,
+    brute_threshold: int,
+    brute_work: int,
+    n_right: int | None,
+) -> DataFrame:
+    """Exact kNN by multi-round ring escalation on ``grid``.
+
+    Round 1: right rows are replicated into their cell's 3x3 halo; left
+    joins its own cell, a window takes local top-k.  A left row's result
+    is PROVEN exact when it found k neighbors and its kth distance is
+    <= ``grid.bound`` for its ring.  Unproven rows escalate: the (small)
+    violator set explodes into a (2r+1)^2 cell neighborhood — note the
+    asymmetry: round 1 replicates the RIGHT side (every left row needs
+    candidates), later rounds replicate the shrinking LEFT violator set
+    — with r doubling per round.  After ``max_rings`` doublings the
+    remainder falls back to a distributed brute pass: every right
+    partition scores the broadcast violators with ``grid.block`` and
+    emits a partial top-k, then one final window.  Ties break on
+    (distance, neighbor_id) in every path, matching the oracle's
+    ORDER BY dist, vid.
     """
     from pyspark.sql.window import Window
 
-    from ..cells import cell_size
-
-    spark = left.sparkSession
-    k_eff = k
-    guarantee = cell_size(res)
-
-    right_c = (
-        right.select(right_id, right_x, right_y)
-        .withColumn(
-            "_cell",
-            _cell_shift_col(F.col(right_x), F.col(right_y), res, F.lit(0), F.lit(0)),
-        )
-    )
-
-    def _offsets(r):
-        return [
-            F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"))
-            for ox in range(-r, r + 1)
-            for oy in range(-r, r + 1)
-        ]
-
-    dxc = F.col(left_x) - F.col(right_x)
-    dyc = F.col(left_y) - F.col(right_y)
+    left_id, left_x, left_y = left_cols
+    right_id, right_x, right_y = right_cols
+    right_c = right.select(right_id, right_x, right_y)
+    dist = grid.dist(F.col(left_x), F.col(left_y), F.col(right_x), F.col(right_y))
     w = Window.partitionBy(left_id).orderBy("distance", "neighbor_id")
+
+    def _home(df, x, y):
+        return df.withColumn("_cell", grid.home(F.col(x), F.col(y)))
+
+    def _score(pairs):
+        return pairs.select(
+            left_id, left_x, left_y, F.col(right_id).alias("neighbor_id"), dist.alias("distance")
+        )
 
     def _topk(scored):
         return (
             scored.withColumn("knn_rank", F.row_number().over(w))
-            .filter(F.col("knn_rank") <= k_eff)
+            .filter(F.col("knn_rank") <= k)
             .withColumn("knn_rank", F.col("knn_rank").cast("int"))
         )
 
@@ -403,37 +445,29 @@ def knn_cellwise(
         keeps candidate-less rows escalating.
         """
         per = ranked.groupBy(left_id).agg(
-            F.max("knn_rank").alias("_n"), F.max("distance").alias("_kd")
+            F.max("knn_rank").alias("_n"),
+            F.max("distance").alias("_kd"),
+            F.first(left_y).alias("_y"),
         )
         proven_ids = per.filter(
-            (F.col("_n") >= k_eff) & (F.col("_kd") <= F.lit(float(r) * guarantee))
+            (F.col("_n") >= k) & (F.col("_kd") <= grid.bound(F.col("_y"), r))
         ).select(left_id)
         proven = ranked.join(proven_ids, on=left_id, how="left_semi")
         remaining = current_left.join(proven_ids, on=left_id, how="left_anti")
         return proven, remaining
 
-    # round 1: halo-replicate the right side, left joins its own cell
-    rightc1 = _halo_replicas(
-        right_c.drop("_cell"), right_id, right_x, right_y, res, _offsets(1)
-    )
-    leftc = left.select(left_id, left_x, left_y).withColumn(
-        "_cell", _cell_shift_col(F.col(left_x), F.col(left_y), res, F.lit(0), F.lit(0))
-    )
-    # no dropDuplicates: the halo filter guarantees each (left, right)
-    # pair matches on at most one cell, so the dedup exchange (as big as
-    # the whole scored set) is provably unnecessary
-    scored1 = leftc.join(rightc1, "_cell").select(
-        left_id,
-        left_x,
-        left_y,
-        F.col(right_id).alias("neighbor_id"),
-        F.sqrt(dxc * dxc + dyc * dyc).alias("distance"),
-    )
-    ranked = _topk(scored1).localCheckpoint()
+    # round 1: halo-replicate the right side, left joins its own cell.
+    # No dropDuplicates: the halo puts each row at most once per cell, so
+    # each (left, right) pair matches on at most one cell and the dedup
+    # exchange (as big as the whole scored set) is provably unnecessary
+    leftc = _home(left.select(left_id, left_x, left_y), left_x, left_y)
+    right_h = grid.halo(right_c, right_id, right_x, right_y, 1)
+    ranked = _topk(_score(leftc.join(right_h, "_cell"))).localCheckpoint()
     proven, remaining = _split_proven(ranked, 1, leftc)
     results = [proven.select(left_id, "neighbor_id", "distance", "knn_rank")]
     remaining = remaining.localCheckpoint()
 
+    right_home = _home(right_c, right_x, right_y)
     r = 2
     rounds = 0
     # adaptive exit: once the violator set is broadcast-small AND the
@@ -451,18 +485,10 @@ def knn_cellwise(
         return nr <= brute_threshold and nr * n_right <= brute_work
 
     while rounds < max_rings and not _go_brute(n_rem) and n_rem > 0:
-        cells = _halo_replicas(
-            remaining.drop("_cell"), left_id, left_x, left_y, res, _offsets(r)
-        )
-        # pair-uniqueness by the same halo-filter argument as round 1
-        scored = cells.join(right_c, "_cell").select(
-            left_id,
-            left_x,
-            left_y,
-            F.col(right_id).alias("neighbor_id"),
-            F.sqrt(dxc * dxc + dyc * dyc).alias("distance"),
-        )
-        ranked_r = _topk(scored).localCheckpoint()
+        # pair-uniqueness as in round 1: only the LEFT is ringed here, the
+        # right sits in its home cell
+        cells = grid.halo(remaining.drop("_cell"), left_id, left_x, left_y, r)
+        ranked_r = _topk(_score(cells.join(right_home, "_cell"))).localCheckpoint()
         proven_r, remaining = _split_proven(ranked_r, r, remaining)
         results.append(proven_r.select(left_id, "neighbor_id", "distance", "knn_rank"))
         remaining = remaining.localCheckpoint()
@@ -474,11 +500,10 @@ def knn_cellwise(
         # distributed brute fallback for the residue: broadcast the (small)
         # violator set, every right partition emits its local top-k, one
         # final window picks the global top-k
-        vrows = remaining.select(left_id, left_x, left_y).collect()
-        vid = np.array([row[left_id] for row in vrows])
-        vx = np.array([row[left_x] for row in vrows], dtype=np.float64)
-        vy = np.array([row[left_y] for row in vrows], dtype=np.float64)
-        bcv = spark.sparkContext.broadcast((vid, vx, vy))
+        bcv = left.sparkSession.sparkContext.broadcast(
+            _collect_right(remaining, left_id, left_x, left_y)
+        )
+        block = grid.block
         part_schema = StructType(
             [
                 StructField(left_id, left.schema[left_id].dataType),
@@ -492,44 +517,28 @@ def knn_cellwise(
             for pdf in it:
                 if not len(pdf):
                     continue
-                ridv = pdf[right_id].to_numpy()
                 # id-sort the partition so column position == id order and
                 # the tie-safe selector keeps the SMALLER id on boundary
                 # ties (the final window orders by distance, neighbor_id)
-                order = np.argsort(ridv, kind="stable")
-                ridv = ridv[order]
+                order = np.argsort(pdf[right_id].to_numpy(), kind="stable")
+                ridv = pdf[right_id].to_numpy()[order]
                 rxv = pdf[right_x].to_numpy(np.float64)[order]
                 ryv = pdf[right_y].to_numpy(np.float64)[order]
-                dx = vx_[:, None] - rxv[None, :]
-                dy = vy_[:, None] - ryv[None, :]
-                d = np.sqrt(dx * dx + dy * dy)
-                kk = min(k_eff, d.shape[1])
-                part = _select_topk_tiesafe(d, kk)
+                pos, d = block(vx_, vy_, rxv, ryv, min(k, len(pdf)))
                 yield pd.DataFrame(
                     {
-                        left_id: np.repeat(vid_, kk),
-                        "neighbor_id": ridv[part].ravel(),
-                        "distance": np.take_along_axis(d, part, axis=1).ravel(),
+                        left_id: np.repeat(vid_, pos.shape[1]),
+                        "neighbor_id": ridv[pos].ravel(),
+                        "distance": d.ravel(),
                     }
                 )
 
-        partials = right_c.drop("_cell").mapInPandas(brute, schema=part_schema)
+        partials = right_c.mapInPandas(brute, schema=part_schema)
         # partitions of right_c are row-disjoint, so each (violator,
         # right-row) pair is scored by exactly one partition: no dedup
         results.append(_topk(partials))
 
-    out = results[0]
-    for extra in results[1:]:
-        out = out.unionByName(extra)
-    return out
-
-
-def knn_guarantee_violations(ranked: DataFrame, k: int, res: int, left_id: str = "uid"):
-    """Rows whose local top-k is not provably exact (kth dist > cell size)."""
-    from ..cells import cell_size
-
-    kth = ranked.filter(F.col("knn_rank") == k)
-    return kth.filter(F.col("distance") > cell_size(res))
+    return reduce(DataFrame.unionByName, results)
 
 
 def _cell_shift_col(x, y, res: int, ox, oy):
@@ -581,7 +590,7 @@ def _cell_shift_valid_col(x, y, res: int, ox, oy):
     return (sx >= 0) & (sx <= n) & (sy >= 0) & (sy <= n)
 
 
-def _halo_replicas(df, id_col: str, x_col: str, y_col: str, res: int, offsets):
+def _halo_replicas(df, id_col: str, x_col: str, y_col: str, r: int, *, res: int):
     """Replicate rows of ``df`` into their (2r+1)^2 ring cells with
     pair-uniqueness per cell and EXACT clamped semantics at the border.
 
@@ -595,7 +604,7 @@ def _halo_replicas(df, id_col: str, x_col: str, y_col: str, res: int, offsets):
     (tiny or empty) subset, so the dedup costs nothing.
     """
     x, y = F.col(x_col), F.col(y_col)
-    exploded = df.withColumn("_o", F.explode(F.array(*offsets)))
+    exploded = df.withColumn("_o", F.explode(F.array(*_ring_offsets(r))))
     shift = _cell_shift_col(x, y, res, F.col("_o.ox"), F.col("_o.oy"))
     in_dom = _in_domain_col(x, y, res)
     fast = (

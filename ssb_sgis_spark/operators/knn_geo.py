@@ -1,7 +1,7 @@
-"""Exact haversine kNN at scale: cell-partitioned ring escalation on a
-wrap-aware lon/lat grid (closes the scale-path refusal that
-``knn.get_k_nearest_neighbors(metric="haversine")`` used to raise for
-non-broadcastable right sides).
+"""The lon/lat grid of the cellwise kNN scale path: exact haversine kNN
+by the shared ring-escalation driver on a wrap-aware lon/lat grid
+(``knn.get_k_nearest_neighbors(metric="haversine")`` routes
+non-broadcastable right sides here).
 
 Why the planar cellwise guarantee breaks on a sphere: "outside the
 (2r+1)² ring" separates candidates by ≥ r·cell in LON-INDEX or
@@ -34,23 +34,28 @@ clamped at the poles; replicas whose lat offset leaves the grid are
 dropped (no cell exists there — nothing to probe).  Pair-uniqueness
 per cell holds whenever 2r+1 ≤ N; wider rings dedup on (id, cell).
 
-Everything else mirrors ``knn.knn_cellwise`` (reference parity
-``neighbors.py:228-382``): round-1 replicates the RIGHT side into 3×3
-halos, later rounds replicate the shrinking LEFT violator set with r
-doubling, then a brute stage (broadcast violators, per-partition
-numpy haversine top-k, one final window).  Distances are great-circle
-metres on the R=6371008.8 sphere — the same formula as
-``kernels.geom.haversine_m`` and the knn_haversine oracle; cross-engine
-comparisons round to whole metres (documented ~1e-9 m libm drift).
+This module is only the grid and the metric: :func:`knn_cellwise_haversine`
+builds a ``knn.CellGrid`` from them and runs the one ring-escalation
+driver ``knn._knn_rings`` that the planar ``knn.knn_cellwise`` also
+runs (reference parity ``neighbors.py:228-382``): round 1 replicates
+the RIGHT side into 3×3 halos, later rounds replicate the shrinking
+LEFT violator set with r doubling, then a brute stage (broadcast
+violators, per-partition numpy haversine top-k, one final window).
+Distances are great-circle metres on the R=6371008.8 sphere — the same
+formula as ``kernels.geom.haversine_m`` and the knn_haversine oracle;
+cross-engine comparisons round to whole metres (documented ~1e-9 m libm
+drift).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+
+from .knn import CellGrid, _knn_rings, _ring_offsets, _topk_block_haversine
 
 R_EARTH = 6371008.8
 
@@ -71,17 +76,12 @@ def _geo_cell(lon, lat, cell_deg: float, n_lon: int, n_lat: int, ox, oy):
     )
 
 
-def _geo_halo(df, id_col, lon_col, lat_col, cell_deg, n_lon, n_lat, r: int):
+def _geo_halo(df, id_col, lon_col, lat_col, r: int, *, cell_deg, n_lon, n_lat):
     """Replicate rows into their (2r+1)² ring cells (lon wraps, lat
     drops off-grid replicas).  Distinct cells per row when 2r+1 ≤ n_lon,
     else dedup."""
-    offsets = [
-        F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"))
-        for ox in range(-r, r + 1)
-        for oy in range(-r, r + 1)
-    ]
     out = (
-        df.withColumn("_o", F.explode(F.array(*offsets)))
+        df.withColumn("_o", F.explode(F.array(*_ring_offsets(r))))
         .withColumn(
             "_cell",
             _geo_cell(
@@ -145,8 +145,6 @@ def knn_cellwise_haversine(
     [-180, 180); output ``(left_id, neighbor_id, distance, knn_rank)``
     in metres, ties on (distance, neighbor_id) — the broadcast path's
     and oracle's ordering."""
-    from ssb_sgis_spark.operators.knn import _select_topk_tiesafe
-
     if not (0 < cell_deg <= 90):
         raise ValueError("cell_deg must be in (0, 90]")
     n_lon = int(round(360.0 / cell_deg))
@@ -154,149 +152,20 @@ def knn_cellwise_haversine(
         raise ValueError("cell_deg must divide 360 exactly (wrap grid)")
     n_lat = int(np.ceil(180.0 / cell_deg))
 
-    spark = left.sparkSession
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(left_id).orderBy("distance", "neighbor_id")
-
-    def _topk(scored):
-        return (
-            scored.withColumn("knn_rank", F.row_number().over(w))
-            .filter(F.col("knn_rank") <= k)
-            .withColumn("knn_rank", F.col("knn_rank").cast("int"))
-        )
-
-    def _split_proven(ranked, r, current_left):
-        # violators from current_left (anti-join), NOT from ranked:
-        # candidate-less rows must keep escalating (knn.py's invariant)
-        per = ranked.groupBy(left_id).agg(
-            F.max("knn_rank").alias("_n"),
-            F.max("distance").alias("_kd"),
-            F.first(left_y).alias("_lat"),
-        )
-        proven_ids = per.filter(
-            (F.col("_n") >= k)
-            & (F.col("_kd") <= _proof_bound(F.col("_lat"), r, cell_deg))
-        ).select(left_id)
-        proven = ranked.join(proven_ids, on=left_id, how="left_semi")
-        remaining = current_left.join(proven_ids, on=left_id, how="left_anti")
-        return proven, remaining
-
-    dist = _haversine_col(
-        F.col(left_x), F.col(left_y), F.col(right_x), F.col(right_y)
+    grid = CellGrid(
+        home=lambda lon, lat: _geo_cell(lon, lat, cell_deg, n_lon, n_lat, F.lit(0), F.lit(0)),
+        halo=partial(_geo_halo, cell_deg=cell_deg, n_lon=n_lon, n_lat=n_lat),
+        dist=_haversine_col,
+        bound=lambda lat, r: _proof_bound(lat, r, cell_deg),
+        block=_topk_block_haversine,
     )
 
-    right_c = right.select(
-        right_id,
-        F.pmod(F.col(right_x) + 180.0, F.lit(360.0)) - 180.0,
-        F.col(right_y),
-    ).toDF(right_id, right_x, right_y)
-    left_c = left.select(
-        left_id,
-        F.pmod(F.col(left_x) + 180.0, F.lit(360.0)) - 180.0,
-        F.col(left_y),
-    ).toDF(left_id, left_x, left_y)
+    def wrap_lon(c):
+        return (F.pmod(F.col(c) + 180.0, F.lit(360.0)) - 180.0).alias(c)
 
-    # round 1: right into 3x3 halos, left joins its own cell
-    right_h = _geo_halo(right_c, right_id, right_x, right_y, cell_deg, n_lon, n_lat, 1)
-    left_k = left_c.withColumn(
-        "_cell",
-        _geo_cell(
-            F.col(left_x), F.col(left_y), cell_deg, n_lon, n_lat, F.lit(0), F.lit(0)
-        ),
+    return _knn_rings(
+        left.select(left_id, wrap_lon(left_x), left_y),
+        right.select(right_id, wrap_lon(right_x), right_y),
+        k, grid, (left_id, left_x, left_y), (right_id, right_x, right_y),
+        max_rings, brute_threshold, brute_work, n_right,
     )
-    scored1 = left_k.join(right_h, "_cell").select(
-        left_id,
-        left_x,
-        left_y,
-        F.col(right_id).alias("neighbor_id"),
-        dist.alias("distance"),
-    )
-    ranked = _topk(scored1).localCheckpoint()
-    proven, remaining = _split_proven(ranked, 1, left_k)
-    results = [proven.select(left_id, "neighbor_id", "distance", "knn_rank")]
-    remaining = remaining.localCheckpoint()
-
-    base_right = right_c.withColumn(
-        "_cell",
-        _geo_cell(
-            F.col(right_x), F.col(right_y), cell_deg, n_lon, n_lat, F.lit(0), F.lit(0)
-        ),
-    )
-    n_rem = remaining.count()
-    if n_right is None:
-        n_right = right_c.count()
-    r = 2
-    rounds = 0
-
-    def _go_brute(nr):
-        return nr <= brute_threshold and nr * n_right <= brute_work
-
-    while rounds < max_rings and not _go_brute(n_rem) and n_rem > 0:
-        cells = _geo_halo(
-            remaining.drop("_cell"), left_id, left_x, left_y, cell_deg, n_lon, n_lat, r
-        )
-        scored = cells.join(base_right, "_cell").select(
-            left_id,
-            left_x,
-            left_y,
-            F.col(right_id).alias("neighbor_id"),
-            dist.alias("distance"),
-        )
-        # a (left, right) pair can match on several cells once both
-        # sides are replicated? no: only the LEFT is ringed here, the
-        # right sits in its home cell — one match per pair, no dedup
-        ranked_r = _topk(scored).localCheckpoint()
-        proven_r, remaining = _split_proven(ranked_r, r, remaining)
-        results.append(proven_r.select(left_id, "neighbor_id", "distance", "knn_rank"))
-        remaining = remaining.localCheckpoint()
-        n_rem = remaining.count()
-        r *= 2
-        rounds += 1
-
-    if n_rem:
-        from ssb_sgis_spark.kernels.geom import haversine_m
-
-        vrows = remaining.select(left_id, left_x, left_y).collect()
-        vid = np.array([row[left_id] for row in vrows])
-        vlon = np.array([row[left_x] for row in vrows], dtype=np.float64)
-        vlat = np.array([row[left_y] for row in vrows], dtype=np.float64)
-        bcv = spark.sparkContext.broadcast((vid, vlon, vlat))
-        part_schema = StructType(
-            [
-                StructField(left_id, left.schema[left_id].dataType),
-                StructField("neighbor_id", right.schema[right_id].dataType),
-                StructField("distance", DoubleType()),
-            ]
-        )
-
-        def brute(it):
-            vid_, vlon_, vlat_ = bcv.value
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                ridv = pdf[right_id].to_numpy()
-                order = np.argsort(ridv, kind="stable")
-                ridv = ridv[order]
-                rlon = pdf[right_x].to_numpy(np.float64)[order]
-                rlat = pdf[right_y].to_numpy(np.float64)[order]
-                d = haversine_m(
-                    vlon_[:, None], vlat_[:, None], rlon[None, :], rlat[None, :]
-                )
-                kk = min(k, d.shape[1])
-                part = _select_topk_tiesafe(d, kk)
-                yield pd.DataFrame(
-                    {
-                        left_id: np.repeat(vid_, kk),
-                        "neighbor_id": ridv[part].ravel(),
-                        "distance": np.take_along_axis(d, part, axis=1).ravel(),
-                    }
-                )
-
-        partials = right_c.mapInPandas(brute, schema=part_schema)
-        results.append(_topk(partials))
-
-    out = results[0]
-    for extra in results[1:]:
-        out = out.unionByName(extra)
-    return out

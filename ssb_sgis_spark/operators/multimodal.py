@@ -26,7 +26,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = (
@@ -1120,37 +1119,3 @@ def mp4_stats_oracle_sql(ids_rel: str, id_col: str = "doc_id") -> str:
                     - (CAST(sx AS DOUBLE) / {AVI_NPIX}) * (CAST(sx AS DOUBLE) / {AVI_NPIX})) * 1000) AS BIGINT) AS std_x1000
         FROM mom
     """
-
-
-def mp4_metadata(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Codec-agnostic ISO-BMFF metadata extraction — works for ANY mp4
-    (including avc1 files whose frames we refuse to decode): codec
-    fourcc, dimensions, container duration, sample count and bytes.
-    Pytest-verified (sample_bytes is Huffman-coded size, not
-    SQL-expressible)."""
-    from ssb_sgis_spark.kernels.mp4 import mp4_metadata_row
-
-    schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("codec", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("sample_bytes", T.LongType()),
-        ]
-    )
-
-    def kernel(it):
-        for pdf in it:
-            rows = {k.name: [] for k in schema.fields}
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                meta = mp4_metadata_row(bytes(payload))
-                rows[id_col].append(mid)
-                for k in ("codec", "width", "height", "duration_ms",
-                          "n_samples", "sample_bytes"):
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(kernel, schema=schema)

@@ -9,7 +9,6 @@ layout, no pairwise work and no shuffle.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -350,13 +349,6 @@ def sort_large_first(df: DataFrame, geometry_col: str = "geometry") -> DataFrame
             yield o
 
     return df.mapInPandas(kernel, schema=schema).orderBy(F.desc("_area")).drop("_area")
-
-
-def drop_duplicate_geometries(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
-    """Drop geometrically-equal rows via normalized-WKB hash
-    (reference ``duplicates.py:251-297`` uses STRtree "within" pairs; exact
-    coordinate equality is the Spark-native O(n) version)."""
-    return df.dropDuplicates([geometry_col])
 
 
 def sort_long_first(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:

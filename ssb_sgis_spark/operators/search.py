@@ -413,9 +413,14 @@ def retrieval_scorecard(
     Scale shape: each system's list is |queries|·k rows; the relevant
     hit per query is found by one equi-join on (query, doc) against the
     query set, then everything collapses in one combinable aggregate.
+
+    Raises ``ValueError`` on an empty query set: its MRR is undefined,
+    and a NULL (or missing) scorecard row would read as a silent zero.
     """
     q = queries.select(F.col(query_id_col).alias("_q"))
     n_q = q.count()
+    if n_q == 0:
+        raise ValueError("retrieval_scorecard: empty query set, MRR is undefined")
     parts = []
     for name, df, rank_col in systems:
         hit = df.filter(F.col(query_id_col) == F.col(id_col)).select(

@@ -82,16 +82,6 @@ def hll_sketch(
     )
 
 
-def hll_sketch_sql(
-    rel: str, value_col: str, bucket_hex: int = DEFAULT_BUCKET_HEX
-) -> str:
-    bucket, rank = hll_register_exprs(value_col, bucket_hex)
-    return f"""
-    SELECT {bucket} AS bucket, CAST(max({rank}) AS BIGINT) AS max_rank
-    FROM {rel} GROUP BY {bucket}
-    """
-
-
 def hll_estimate(
     registers: dict[str, int] | list[tuple[str, int]],
     bucket_hex: int = DEFAULT_BUCKET_HEX,
@@ -164,27 +154,6 @@ def cms_sketch(
         .groupBy("seed", "col")
         .agg(F.sum("_w").alias("cnt"))
     )
-
-
-def cms_sketch_sql(
-    rel: str,
-    value_col: str,
-    weight_col: str | None = None,
-    depth: int = CMS_DEPTH,
-    width_hex: int = CMS_WIDTH_HEX,
-) -> str:
-    cols = cms_register_exprs(value_col, depth, width_hex)
-    w = weight_col if weight_col else "1"
-    arms = "\n      UNION ALL ".join(
-        f"SELECT CAST({i} AS BIGINT) AS seed, {c} AS col,"
-        f" CAST({w} AS BIGINT) AS w FROM {rel}"
-        for i, c in enumerate(cols)
-    )
-    return f"""
-    SELECT seed, col, CAST(sum(w) AS BIGINT) AS cnt
-    FROM ({arms})
-    GROUP BY seed, col
-    """
 
 
 def cms_estimate(

@@ -51,10 +51,3 @@ def raster_tiles_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(
         rows, "tile_ix int, tile_iy int, nx int, ny int, payload binary"
     )
-
-
-def decode_tile(row) -> np.ndarray:
-    """(ny, nx) int32 block; [j, i] is cell (tile_ix*TILE+i, tile_iy*TILE+j)."""
-    return np.frombuffer(bytes(row["payload"]), dtype="<i4").reshape(
-        row["ny"], row["nx"]
-    )

@@ -10,7 +10,6 @@ from ssb_sgis_spark.operators.knn import (
     get_all_distances,
     get_k_nearest_neighbors,
     knn_cellwise,
-    knn_guarantee_violations,
     sjoin_nearest,
 )
 from ssb_sgis_spark.sources.pages import pages_df, pages_np
@@ -105,29 +104,70 @@ def test_all_distances_is_cross_product(spark, frames):
     assert out.count() == 10 * 50
 
 
-def test_knn_cellwise_zero_candidate_rows_escalate(spark, frames):
+def _planar_outlier_case(spark, frames):
+    """Pages vs the point cloud on the planar grid; the outlier sits far
+    outside the cloud's bounding box."""
+    left, right, lp, rp = frames
+    rx, ry = rp["px"].to_numpy(), rp["py"].to_numpy()
+    return (
+        left.select("uid", "x", "y").limit(20),
+        (9.9e6, 9.9e6),
+        lambda lx: knn_cellwise(lx, right, k=3, res=9),
+        rp["vid"].to_numpy(),
+        lambda x, y: np.sqrt((x - rx) ** 2 + (y - ry) ** 2),
+    )
+
+
+def _haversine_outlier_case(spark, frames):
+    """A lon/lat cloud over southern Norway on the wrap grid; the outlier
+    sits in the South Pacific, hundreds of cells from any right point."""
+    from ssb_sgis_spark.kernels.geom import haversine_m
+    from ssb_sgis_spark.operators.knn_geo import knn_cellwise_haversine
+
+    rng = np.random.default_rng(5)
+    rid = np.arange(200)
+    rlon, rlat = rng.uniform(4, 12, 200), rng.uniform(58, 62, 200)
+    right = spark.createDataFrame(
+        pd.DataFrame({"vid": rid, "px": rlon, "py": rlat})
+    )
+    left = spark.createDataFrame(
+        pd.DataFrame(
+            {"uid": np.arange(20), "x": rng.uniform(4, 12, 20), "y": rng.uniform(58, 62, 20)}
+        )
+    )
+    return (
+        left,
+        (-120.0, -45.0),
+        lambda lx: knn_cellwise_haversine(lx, right, k=3, cell_deg=0.5),
+        rid,
+        lambda x, y: haversine_m(x, y, rlon, rlat),
+    )
+
+
+@pytest.mark.parametrize(
+    "case", [_planar_outlier_case, _haversine_outlier_case], ids=["planar", "haversine"]
+)
+def test_knn_cellwise_zero_candidate_rows_escalate(spark, frames, case):
     """A left row whose 3x3 halo (and later rings) holds NO right points
     must still emit exactly k rows — regression for the violator set
     being derived from scored rows (zero-candidate rows appeared in
-    neither proven nor violators, so they were silently dropped)."""
-    left, right, lp, rp = frames
-    # one outlier far outside the right cloud's bounding box: its cell
-    # neighborhood is empty at any reasonable res, so it exercises the
-    # escalate -> brute-fallback path end to end
+    neither proven nor violators, so they were silently dropped).  Both
+    grids run the same ring driver, so both pin the invariant."""
+    left, (ox, oy), run, rid, dist = case(spark, frames)
+    # one outlier far outside the right cloud: its cell neighborhood is
+    # empty, so it exercises the escalate -> brute-fallback path end to end
     outlier = spark.createDataFrame(
-        pd.DataFrame({"uid": [10_000_001], "x": [9.9e6], "y": [9.9e6]})
+        pd.DataFrame({"uid": [10_000_001], "x": [ox], "y": [oy]})
     )
-    lx = left.select("uid", "x", "y").limit(20).unionByName(outlier)
-    out = knn_cellwise(lx, right, k=3, res=9).toPandas()
+    lx = left.unionByName(outlier)
+    out = run(lx).toPandas()
     assert len(out) == 21 * 3
     got = out[out["uid"] == 10_000_001].sort_values("knn_rank")
     assert len(got) == 3
     # and the outlier's neighbors match the brute-force answer
-    d = np.sqrt(
-        (9.9e6 - rp["px"].to_numpy()) ** 2 + (9.9e6 - rp["py"].to_numpy()) ** 2
-    )
-    idx = np.lexsort((rp["vid"].to_numpy(), d))[:3]
-    assert list(got["neighbor_id"]) == list(rp["vid"].to_numpy()[idx])
+    d = dist(ox, oy)
+    idx = np.lexsort((rid, d))[:3]
+    assert list(got["neighbor_id"]) == list(rid[idx])
 
 
 def test_select_topk_tiesafe_boundary_ties():

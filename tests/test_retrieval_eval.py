@@ -1,5 +1,7 @@
 """Retrieval scorecard (operators/search.retrieval_scorecard)."""
 
+import pytest
+
 from ssb_sgis_spark.operators.search import MRR_SCALE, retrieval_scorecard
 
 
@@ -36,3 +38,10 @@ def test_systems_score_independently(spark):
     got = _run(spark, [("a", perfect), ("b", useless)], [0, 1])
     assert got["a"] == (2, 2, MRR_SCALE)
     assert got["b"] == (2, 0, 0)
+
+
+def test_empty_query_set_raises(spark):
+    # no queries means no MRR: refuse instead of a NULL/missing row
+    q = spark.createDataFrame([], "query_id long")
+    with pytest.raises(ValueError, match="empty query set"):
+        retrieval_scorecard([("sys", _mk(spark, [(0, 0, 1)]), "rank")], q)
