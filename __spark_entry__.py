@@ -1005,14 +1005,14 @@ def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor parse (JVM regex) → host-graph contraction (ONE map-side
     combined groupBy; the shuffle carries |hosts|² weighted rows, never
     the raw links) → weighted integer PageRank over the contracted
-    graph (operators/links.py + linkgraph.pagerank_weighted).  Exact
+    graph (operators/links.py + linkgraph.pagerank(weight_col=)).  Exact
     micro-unit arithmetic ≡ unrolled DuckDB CTEs."""
     from ssb_sgis_spark.operators.links import (
         anchored_pages,
         extract_links,
         host_edges,
     )
-    from ssb_sgis_spark.operators.linkgraph import pagerank_weighted
+    from ssb_sgis_spark.operators.linkgraph import pagerank
 
     pages = pages_df(spark, sf_dir, with_payload=True).select("uid", "url", "html")
     links = extract_links(anchored_pages(pages), keep=["url"])
@@ -1023,7 +1023,9 @@ def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hosts = edges.select(F.col("src").alias("host")).union(
         edges.select("dst")
     ).distinct()
-    return pagerank_weighted(hosts, edges, n_iter=HOST_RANK_ITERS)
+    return pagerank(
+        hosts, edges, id_col="host", n_iter=HOST_RANK_ITERS, weight_col="w"
+    )
 
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2478,14 +2480,14 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreachable from any seed settle at exactly 0 — the web-spam
     demotion signal beside uniform pagerank.  Same lazy-chained
     integer-exact loop; oracle = unrolled CTEs of the identical rule."""
-    from ssb_sgis_spark.operators.linkgraph import link_edges, pagerank_seeded
+    from ssb_sgis_spark.operators.linkgraph import link_edges, pagerank
 
     docs = docs_df(spark, sf_dir).select("doc_id")
     n = docs.count()
     seeds = docs.filter(F.col("doc_id") % TRUST_SEED_MOD == 0)
-    return pagerank_seeded(
-        docs, link_edges(docs, n=n), seeds, n_iter=PAGERANK_ITERS
-    )
+    return pagerank(
+        docs, link_edges(docs, n=n), n_iter=PAGERANK_ITERS, seeds=seeds
+    ).withColumnRenamed("rank_micro", "trust_micro")
 
 
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3683,7 +3685,7 @@ def _link_extract_oracle() -> str:
 
 
 def _host_rank_oracle() -> str:
-    from ssb_sgis_spark.operators.linkgraph import _A, _B, pagerank_weighted_sql
+    from ssb_sgis_spark.operators.linkgraph import _A, _B, pagerank_sql
 
     raw = (
         "SELECT 'site' || CAST(uid % 1000 AS VARCHAR) || '.no' AS src, "
@@ -3692,10 +3694,10 @@ def _host_rank_oracle() -> str:
     )
     edges = f"SELECT src, dst, count(*) AS w FROM ({raw}) GROUP BY 1, 2"
     verts = (
-        f"SELECT DISTINCT src AS v FROM ({raw}) "
-        f"UNION SELECT DISTINCT dst FROM ({raw})"
+        f"SELECT v, 1 AS is_seed FROM (SELECT DISTINCT src AS v FROM ({raw}) "
+        f"UNION SELECT DISTINCT dst FROM ({raw}))"
     )
-    return pagerank_weighted_sql(verts, edges, id_col="host", n_iter=HOST_RANK_ITERS)
+    return pagerank_sql(verts, edges, id_col="host", n_iter=HOST_RANK_ITERS)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3745,7 +3747,6 @@ def oracle_sql() -> dict[str, str]:
     from ssb_sgis_spark.operators.linkgraph import link_edges_sql, pagerank_sql
     from ssb_sgis_spark.operators.linkgraph import label_propagation_sql as _lpa_sql
     from ssb_sgis_spark.operators.linkgraph import (
-        pagerank_seeded_sql,
         random_walks_sql,
         triangle_counts_sql,
     )
@@ -3765,6 +3766,11 @@ def oracle_sql() -> dict[str, str]:
 
     pages = pages_sql()
     points = points_sql()
+    law_edges_w = (
+        "SELECT src, dst, 1 AS w FROM ("
+        + link_edges_sql("documents", n="(SELECT count(*) FROM documents)")
+        + ")"
+    )
     out = {
         "pip_join": _pip_oracle("SELECT uid, muni_id FROM hits"),
         # tiling is an execution strategy; semantics == pip_join
@@ -4368,17 +4374,17 @@ def oracle_sql() -> dict[str, str]:
             n="(SELECT count(*) FROM documents)",
             n_steps=WALK_STEPS,
         ),
-        "trustrank": pagerank_seeded_sql(
-            "documents",
-            f"doc_id % {TRUST_SEED_MOD} = 0",
-            n="(SELECT count(*) FROM documents)",
+        "trustrank": "SELECT doc_id, rank_micro AS trust_micro FROM ("
+        + pagerank_sql(
+            "SELECT doc_id AS v, CASE WHEN doc_id % "
+            f"{TRUST_SEED_MOD} = 0 THEN 1 ELSE 0 END AS is_seed FROM documents",
+            law_edges_w,
             n_iter=PAGERANK_ITERS,
-        ),
+        )
+        + ")",
         "pagerank": pagerank_sql(
-            "documents",
-            link_edges_sql(
-                "documents", n="(SELECT count(*) FROM documents)"
-            ),
+            "SELECT doc_id AS v, 1 AS is_seed FROM documents",
+            law_edges_w,
             n_iter=PAGERANK_ITERS,
         ),
         "communities": _lpa_sql(
@@ -4457,7 +4463,8 @@ def oracle_sql() -> dict[str, str]:
         "hll_daily": _hll_grouped_oracle_independent(
             "events",
             "CAST(user_id AS VARCHAR)",
-            f"CAST(epoch(ts) AS BIGINT) // {DAY_US // 1_000_000}",
+            "date_diff('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts)"
+            f" // {DAY_US}",
             "day",
         ),
         "distinct_sketch": _hll_oracle_independent(

@@ -6,12 +6,16 @@ Driver-side kernel for the Christofides tour construction
 (``networkanalysis/traveling_salesman.py:11-155``), whose matching step
 is Edmonds' blossom algorithm.  No networkx exists in this environment,
 so this module implements the classical O(n^3) primal-dual blossom
-method from scratch (Edmonds 1965, "Paths, trees, and flowers"; the
-stage/substage organization follows Galil, "Efficient algorithms for
-finding maximum matching in graphs", ACM Computing Surveys 18(1),
-1986): alternating trees grown from free vertices, odd cycles shrunk
-into blossoms with dual variables, four-case dual adjustment, blossom
-expansion on T-labels with zero dual.
+method (Edmonds 1965, "Paths, trees, and flowers"; Galil, "Efficient
+algorithms for finding maximum matching in graphs", ACM Computing
+Surveys 18(1), 1986): alternating trees grown from free vertices, odd
+cycles shrunk into blossoms with dual variables, four-case dual
+adjustment, blossom expansion on T-labels with zero dual.  The
+stage/substage organization, function decomposition (``assign_label``,
+``scan_blossom``, ``add_blossom``, ``expand_blossom``,
+``augment_blossom``, ``augment_matching``) and flat-array state layout
+follow Joris van Rantwijk's public-domain ``mwmatching.py`` formulation
+of Galil's survey (the lineage networkx's matching also comes from).
 
 Weights are int64 throughout (duals stay half-integral — tracked as
 2x-scaled integers), so every dual update is exact and termination is

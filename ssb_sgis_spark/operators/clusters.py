@@ -176,6 +176,9 @@ def connected_components(
     magnitude smaller than the corpus, so this is the difference
     between shuffling a trillion labels per round and shuffling the
     few that are actually in play.
+
+    Raises ``RuntimeError`` when the labels still change in round
+    ``max_iter`` rather than returning unconverged components.
     """
     sym = edges.selectExpr("src as a", "dst as b").unionAll(
         edges.selectExpr("dst as a", "src as b")
@@ -233,6 +236,11 @@ def connected_components(
         if new_fp == prev_fp:
             break
         prev_fp = new_fp
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter}:"
+            f" labels still changed in round {max_iter}; raise max_iter"
+        )
     return labels.unionByName(singletons).select(
         F.col("v").alias(id_col), F.col("lbl").alias(component_col)
     )

@@ -1,5 +1,6 @@
 """Link-graph operators: deterministic edge synthesis + fixed-point
-integer PageRank.
+integer PageRank (uniform, weighted and seeded in one loop), HITS,
+label propagation, triangle counts and random walks.
 
 The web-corpus workload the reference never had but every crawl pipeline
 runs: rank pages by the link graph.  Two design decisions make it fit
@@ -12,13 +13,15 @@ this engine's verification model:
   arithmetic — no data files, no RNG.
 * **Integer fixed-point ranks.**  Classic float PageRank can never be
   compared bit-for-bit across engines (sum order, libm).  Ranks here
-  live in integer MICRO-units: ``r0 = 10^6``; each round every node
-  sends ``r div outdeg`` (integer division) along its edges and
-  ``r' = 150000 + (85 * Σ contrib) div 100``.  Every operation is exact
-  64-bit integer arithmetic, so 5 rounds of Spark shuffles equal 5
-  unrolled DuckDB CTEs EXACTLY.  (Truncating division leaks a few
-  micro-units of mass per round — deterministic, identical in both
-  engines, and irrelevant to ranking.)
+  live in integer MICRO-units: ``r0 = 10^6``; each round every node u
+  sends ``w · (r div W_u)`` (integer division; ``w`` the edge weight,
+  ``W_u`` u's total out-weight — ``r div outdeg`` on an unweighted
+  graph) along its edges and ``r' = is_seed · 150000 + (85 * Σ contrib)
+  div 100`` (``is_seed = 1`` everywhere unless a seed set is given).
+  Every operation is exact 64-bit integer arithmetic, so 5 rounds of
+  Spark shuffles equal 5 unrolled DuckDB CTEs EXACTLY.  (Truncating
+  division leaks a few micro-units of mass per round — deterministic,
+  identical in both engines, and irrelevant to ranking.)
 
 Scale shape (10^12-edge graph):
 * per-round cost = one shuffle of (src, rank) x one shuffle of
@@ -28,7 +31,9 @@ Scale shape (10^12-edge graph):
   the small side; a real deployment would bucket edges by src so the
   join is co-located — documented here, not needed at bench scale;
 * rounds are fixed (no driver-side convergence collect in the hot
-  loop), so the whole run is ``2 * n_iter`` shuffles, period.
+  loop) and chain lazily, so the whole run is ``2 * n_iter`` shuffles,
+  period; every fixed-round loop here cuts its plan every
+  ``CHECKPOINT_EVERY`` rounds (:func:`_bound_depth`).
 """
 
 from __future__ import annotations
@@ -42,14 +47,10 @@ __all__ = [
     "pagerank",
     "pagerank_round",
     "pagerank_sql",
-    "pagerank_weighted",
-    "pagerank_weighted_sql",
     "hits",
     "hits_sql",
     "triangle_counts",
     "triangle_counts_sql",
-    "pagerank_seeded",
-    "pagerank_seeded_sql",
     "random_walks",
     "random_walks_sql",
 ]
@@ -61,6 +62,17 @@ _B = 16807
 
 R0_MICRO = 1_000_000  # initial rank, micro-units
 TELEPORT_MICRO = 150_000  # (1 - d) * 10^6 with damping d = 0.85
+CHECKPOINT_EVERY = 8  # lazily chained rounds between plan-depth cuts
+
+
+def _bound_depth(df: DataFrame, i: int, n_iter: int) -> DataFrame:
+    """Eager-checkpoint ``df`` after every ``CHECKPOINT_EVERY``-th of
+    ``n_iter`` lazily chained rounds (``i`` 0-based) so deep runs keep a
+    bounded plan; the last round is never cut — the caller's action runs
+    it."""
+    if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < n_iter:
+        return df.localCheckpoint(eager=True)
+    return df
 
 
 def link_edges(df: DataFrame, id_col: str = "doc_id", n: int | None = None) -> DataFrame:
@@ -96,7 +108,8 @@ def pagerank(
     edges: DataFrame,
     id_col: str = "doc_id",
     n_iter: int = 5,
-    checkpoint_every: int = 8,
+    weight_col: str | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-point integer PageRank: ``(id_col, rank_micro)`` after
     ``n_iter`` exact rounds (see module docstring for the arithmetic).
@@ -105,34 +118,57 @@ def pagerank(
     Vertices without in-links settle at the teleport mass; vertices
     without out-links simply leak their mass (deterministic, mirrored).
 
+    ``weight_col`` ranks a CONTRACTED graph (e.g. the host graph from
+    ``operators/links.host_edges``): edges carry a link multiplicity
+    ``w`` and node u sends ``w · (r div W_u)`` along each edge, ``W_u``
+    its total outgoing weight — ``w`` parallel unit edges rank exactly
+    like one edge of weight ``w``, and the state and edge list are
+    |hosts|-sized, which is the point of contracting before ranking.
+
+    ``seeds`` (a one-column frame of trusted ids) makes it TrustRank /
+    personalized PageRank (Gyöngyi-Garcia-Molina-Pedersen VLDB'04 — the
+    web-spam demotion / crawl-seed-expansion primitive): teleport mass
+    flows ONLY to the seed set and ranks start at ``R0`` on seeds and 0
+    elsewhere, so pages unreachable from any seed settle at EXACTLY 0
+    (the spam signal).  Seeding every vertex is the uniform rank.  The
+    seed flag rides the checkpointed vertex table, adding nothing to
+    the per-round shuffles.
+
     Rounds chain LAZILY (the whole fixed-round run is one Spark job),
     matching :func:`label_propagation`'s loop hygiene: per-round eager
     checkpoints made fixed per-job overhead dominate (measured 102 s
     for 5 rounds on a 2.56M-node graph at local[32] vs ~15 s lazy);
-    ``checkpoint_every`` bounds plan depth for deep runs.
+    :func:`_bound_depth` bounds plan depth for deep runs.
     """
-    # out-degree folded onto the edge list ONCE; the per-round join then
-    # carries (src, dst, outdeg) and never recomputes degrees
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges_d = edges.join(deg, "src").localCheckpoint(eager=True)
+    # out-weight folded onto the edge list ONCE; the per-round join then
+    # carries (src, dst, w, outw) and never recomputes degrees
+    w = F.lit(1) if weight_col is None else F.col(weight_col)
+    edges_w = edges.select("src", "dst", w.alias("w"))
+    outw = edges_w.groupBy("src").agg(F.sum("w").alias("outw"))
+    edges_d = edges_w.join(outw, "src").localCheckpoint(eager=True)
 
-    verts = nodes.select(F.col(id_col).alias("v")).localCheckpoint(eager=True)
-    ranks = verts.select("v", F.lit(R0_MICRO).cast("long").alias("r"))
+    verts = nodes.select(F.col(id_col).alias("v"))
+    is_seed = F.lit(1)
+    if seeds is not None:
+        flag = seeds.select(F.col(seeds.columns[0]).alias("v"), F.lit(1).alias("_s"))
+        verts = verts.join(flag, "v", "left")
+        is_seed = F.coalesce("_s", F.lit(0))
+    verts = verts.select("v", is_seed.cast("long").alias("is_seed")).localCheckpoint(eager=True)
+    ranks = verts.select("v", (F.col("is_seed") * R0_MICRO).cast("long").alias("r"))
     for i in range(n_iter):
-        ranks = pagerank_round(edges_d, verts, ranks)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _bound_depth(pagerank_round(edges_d, verts, ranks), i, n_iter)
     return ranks.select(F.col("v").alias(id_col), F.col("r").alias("rank_micro"))
 
 
 def pagerank_round(edges_d: DataFrame, verts: DataFrame, ranks: DataFrame) -> DataFrame:
     """One exact rank round as a LAZY plan (factored out so the plan
     audit can assert the per-round join shapes without executing the
-    checkpointed loop): equi-join edges⋈ranks on src, integer contrib
-    agg on dst, left join back to the vertex set."""
+    checkpointed loop): equi-join edges ``(src, dst, w, outw)`` ⋈ ranks
+    on src, integer contrib agg on dst, left join back to the vertex
+    set ``(v, is_seed)``."""
     contrib = (
         edges_d.join(ranks, edges_d["src"] == ranks["v"])
-        .select("dst", F.expr("r div outdeg").alias("c"))
+        .select("dst", F.expr("w * (r div outw)").alias("c"))
         .groupBy("dst")
         .agg(F.sum("c").alias("in_c"))
     )
@@ -141,79 +177,42 @@ def pagerank_round(edges_d: DataFrame, verts: DataFrame, ranks: DataFrame) -> Da
         .select(
             "v",
             F.expr(
-                f"CAST({TELEPORT_MICRO} + (85 * coalesce(in_c, 0)) div 100"
-                " AS BIGINT)"
+                f"CAST(is_seed * {TELEPORT_MICRO}"
+                " + (85 * coalesce(in_c, 0)) div 100 AS BIGINT)"
             ).alias("r"),
         )
     )
 
 
-def pagerank_weighted(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "host",
-    weight_col: str = "w",
-    n_iter: int = 3,
-    checkpoint_every: int = 8,
-) -> DataFrame:
-    """Weighted integer PageRank over a CONTRACTED graph (e.g. the host
-    graph from ``operators/links.host_edges``): edges carry a link
-    multiplicity ``w``; each round node u sends ``w · (r div W_u)``
-    along each edge, ``W_u`` its total outgoing weight.  Same micro-unit
-    arithmetic and shuffle shape as :func:`pagerank` — exactness,
-    teleport, and the unrolled-CTE mirror all carry over; the state and
-    edge list are |hosts|-sized, which is the point of contracting
-    before ranking."""
-    wdeg = edges.groupBy("src").agg(F.sum(weight_col).alias("outw"))
-    edges_d = edges.join(wdeg, "src").localCheckpoint(eager=True)
-    verts = nodes.select(F.col(id_col).alias("v")).localCheckpoint(eager=True)
-    ranks = verts.select("v", F.lit(R0_MICRO).cast("long").alias("r"))
-    for i in range(n_iter):
-        contrib = (
-            edges_d.join(ranks, edges_d["src"] == ranks["v"])
-            .select("dst", F.expr(f"{weight_col} * (r div outw)").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_c"))
-        )
-        ranks = verts.join(contrib, verts["v"] == contrib["dst"], "left").select(
-            "v",
-            F.expr(
-                f"CAST({TELEPORT_MICRO} + (85 * coalesce(in_c, 0)) div 100"
-                " AS BIGINT)"
-            ).alias("r"),
-        )
-        # lazy round chaining (pagerank's loop hygiene); checkpoint only
-        # to bound plan depth on deep runs
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(F.col("v").alias(id_col), F.col("r").alias("rank_micro"))
-
-
-def pagerank_weighted_sql(
+def pagerank_sql(
     verts_sql: str,
     edges_sql: str,
-    id_col: str = "host",
-    n_iter: int = 3,
+    id_col: str = "doc_id",
+    n_iter: int = 5,
 ) -> str:
-    """DuckDB mirror of :func:`pagerank_weighted` (edges_sql must yield
-    (src, dst, w); verts_sql one ``v`` column)."""
+    """DuckDB mirror of :func:`pagerank`: the same rounds unrolled as
+    chained CTEs with the same integer arithmetic (DuckDB ``//`` on
+    integers ≡ Spark ``div`` for the non-negative operands here).
+    ``verts_sql`` yields ``(v, is_seed)`` and ``edges_sql`` yields
+    ``(src, dst, w)`` — an unweighted / unseeded caller selects
+    ``1 AS w`` / ``1 AS is_seed``."""
     ctes = [
         f"verts AS ({verts_sql})",
         f"e AS ({edges_sql})",
         "wdeg AS (SELECT src, sum(w) AS outw FROM e GROUP BY src)",
         "ed AS (SELECT e.src, e.dst, e.w, wdeg.outw FROM e JOIN wdeg USING (src))",
-        f"r0 AS (SELECT v, CAST({R0_MICRO} AS BIGINT) AS r FROM verts)",
+        f"r0 AS (SELECT v, CAST(is_seed * {R0_MICRO} AS BIGINT) AS r FROM verts)",
     ]
     prev = "r0"
     for i in range(1, n_iter + 1):
         ctes.append(
-            f"c{i} AS (SELECT ed.dst, CAST(sum(ed.w * (ed_r.r // ed.outw)) AS BIGINT) AS in_c "
-            f"FROM ed JOIN {prev} ed_r ON ed.src = ed_r.v GROUP BY ed.dst)"
+            f"c{i} AS (SELECT ed.dst, CAST(sum(ed.w * (p.r // ed.outw)) AS BIGINT) AS in_c "
+            f"FROM ed JOIN {prev} p ON ed.src = p.v GROUP BY ed.dst)"
         )
         ctes.append(
-            f"r{i} AS (SELECT verts.v, CAST({TELEPORT_MICRO} + "
-            f"(85 * coalesce(c{i}.in_c, 0)) // 100 AS BIGINT) AS r "
-            f"FROM verts LEFT JOIN c{i} ON verts.v = c{i}.dst)"
+            f"r{i} AS (SELECT verts.v, CAST(verts.is_seed * {TELEPORT_MICRO}"
+            f" + (85 * coalesce(c{i}.in_c, 0)) // 100 AS BIGINT) AS r"
+            f" FROM verts LEFT JOIN c{i} ON verts.v = c{i}.dst)"
         )
         prev = f"r{i}"
     return (
@@ -227,7 +226,6 @@ def hits(
     edges: DataFrame,
     id_col: str = "doc_id",
     n_iter: int = 3,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Kleinberg's HITS (hubs & authorities) as exact integer fixed
     point: ``(id_col, hub_micro, auth_micro)`` after ``n_iter`` rounds.
@@ -244,7 +242,7 @@ def hits(
     bm25 corpus-stats pattern), NOT a driver collect, so the whole
     fixed-round run chains lazily into one Spark job (the collect-based
     loop needed an eager checkpoint per HALF-round: 6 barriers per
-    3-iteration run); ``checkpoint_every`` bounds plan depth for deep
+    3-iteration run); :func:`_bound_depth` bounds plan depth for deep
     runs.  Precondition: the graph has at least one edge (enforced with
     one cheap count on the checkpointed edge list — an empty graph
     would otherwise NULL-divide silently).
@@ -268,9 +266,8 @@ def hits(
             .agg(F.sum("a").alias("m"))
         )
         hub = _max_norm(verts, h_raw, "src", "h")
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            auth = auth.localCheckpoint(eager=True)
-            hub = hub.localCheckpoint(eager=True)
+        auth = _bound_depth(auth, i, n_iter)
+        hub = _bound_depth(hub, i, n_iter)
     return (
         hub.join(auth, "v")
         .select(
@@ -340,40 +337,6 @@ def hits_sql(
     )
 
 
-def pagerank_sql(
-    rel: str,
-    edges_sql: str,
-    id_col: str = "doc_id",
-    n_iter: int = 5,
-) -> str:
-    """DuckDB mirror: the same rounds unrolled as chained CTEs with the
-    same integer arithmetic (DuckDB ``//`` on BIGINT ≡ Spark ``div``
-    for the non-negative operands here)."""
-    ctes = [
-        f"verts AS (SELECT {id_col} AS v FROM {rel})",
-        f"e AS ({edges_sql})",
-        "deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src)",
-        "ed AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src))",
-        f"r0 AS (SELECT v, CAST({R0_MICRO} AS BIGINT) AS r FROM verts)",
-    ]
-    prev = "r0"
-    for i in range(1, n_iter + 1):
-        ctes.append(
-            f"c{i} AS (SELECT ed.dst, CAST(sum(ed_r.r // ed.outdeg) AS BIGINT) AS in_c "
-            f"FROM ed JOIN {prev} ed_r ON ed.src = ed_r.v GROUP BY ed.dst)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT verts.v, CAST({TELEPORT_MICRO} + "
-            f"(85 * coalesce(c{i}.in_c, 0)) // 100 AS BIGINT) AS r "
-            f"FROM verts LEFT JOIN c{i} ON verts.v = c{i}.dst)"
-        )
-        prev = f"r{i}"
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT v AS {id_col}, r AS rank_micro FROM {prev}"
-    )
-
-
 # ---------------------------------------------------------------- label
 # propagation communities (deterministic synchronous LPA).  Community
 # detection over the link graph is the spam-cluster / link-farm signal a
@@ -399,13 +362,12 @@ def label_propagation(
     edges: DataFrame,
     id_col: str = "doc_id",
     n_iter: int = 4,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """(id_col, community) after ``n_iter`` deterministic LPA rounds.
 
     Rounds chain LAZILY (one Spark job at the end — measured 5x faster
     than per-round eager checkpoints at 4 rounds, where fixed per-job
-    overhead dominated); ``checkpoint_every`` bounds plan depth for
+    overhead dominated); :func:`_bound_depth` bounds plan depth for
     deep runs, matching the CC/PageRank loop hygiene."""
     und = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -413,9 +375,7 @@ def label_propagation(
     verts = nodes.select(F.col(id_col).alias("v"))
     labels = verts.select("v", F.col("v").alias("lbl"))
     for i in range(n_iter):
-        labels = lpa_round(und, verts, labels)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            labels = labels.localCheckpoint(eager=True)
+        labels = _bound_depth(lpa_round(und, verts, labels), i, n_iter)
     return labels.select(F.col("v").alias(id_col), F.col("lbl").alias("community"))
 
 
@@ -611,99 +571,6 @@ def triangle_counts_sql(rel: str, id_col: str = "doc_id", n: int | str = 0) -> s
     """
 
 
-def pagerank_seeded(
-    nodes: DataFrame,
-    edges: DataFrame,
-    seeds: DataFrame,
-    id_col: str = "doc_id",
-    n_iter: int = 5,
-    checkpoint_every: int = 8,
-) -> DataFrame:
-    """TrustRank / personalized PageRank: teleport mass flows ONLY to the
-    seed set (Gyöngyi-Garcia-Molina-Pedersen VLDB'04 — the web-spam
-    demotion / crawl-seed-expansion primitive beside the uniform
-    :func:`pagerank`).  ``seeds`` is a one-column frame of trusted ids;
-    per round ``r' = (seed ? TELEPORT : 0) + (85 · Σ r div outdeg) div
-    100`` with ranks seeded at ``R0`` on seeds and 0 elsewhere — all
-    64-bit integer micro-units, so the rounds mirror into unrolled
-    DuckDB CTEs bit-for-bit.  Pages unreachable from any seed settle at
-    EXACTLY 0 (the spam signal).  Same lazy-chained loop and shuffle
-    shape as :func:`pagerank`; the seed flag rides the checkpointed
-    vertex table, adding nothing to the per-round shuffles."""
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges_d = edges.join(deg, "src").localCheckpoint(eager=True)
-    verts = (
-        nodes.select(F.col(id_col).alias("v"))
-        .join(
-            seeds.selectExpr(f"{seeds.columns[0]} as v").withColumn(
-                "_s", F.lit(1)
-            ),
-            "v",
-            "left",
-        )
-        .select("v", F.coalesce("_s", F.lit(0)).cast("long").alias("is_seed"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = verts.select(
-        "v", (F.col("is_seed") * F.lit(R0_MICRO)).cast("long").alias("r")
-    )
-    for i in range(n_iter):
-        contrib = (
-            edges_d.join(ranks, edges_d["src"] == ranks["v"])
-            .select("dst", F.expr("r div outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_c"))
-        )
-        ranks = (
-            verts.join(contrib, verts["v"] == contrib["dst"], "left")
-            .select(
-                "v",
-                F.expr(
-                    f"CAST(is_seed * {TELEPORT_MICRO}"
-                    " + (85 * coalesce(in_c, 0)) div 100 AS BIGINT)"
-                ).alias("r"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(F.col("v").alias(id_col), F.col("r").alias("trust_micro"))
-
-
-def pagerank_seeded_sql(
-    rel: str,
-    seed_pred: str,
-    id_col: str = "doc_id",
-    n: int | str = 0,
-    n_iter: int = 5,
-) -> str:
-    """DuckDB mirror of :func:`pagerank_seeded` over the law edge graph:
-    ``seed_pred`` is a SQL boolean over ``{rel}`` rows selecting the
-    trusted set (e.g. ``"doc_id % 100 = 0"``)."""
-    ctes = [
-        f"e AS ({link_edges_sql(rel, id_col, n)})",
-        "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM e GROUP BY src)",
-        "ed AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src))",
-        f"verts AS (SELECT {id_col} AS v, CASE WHEN {seed_pred} THEN 1 ELSE 0 END AS is_seed FROM {rel})",
-        f"r0 AS (SELECT v, CAST(is_seed * {R0_MICRO} AS BIGINT) AS r FROM verts)",
-    ]
-    prev = "r0"
-    for i in range(1, n_iter + 1):
-        ctes.append(
-            f"c{i} AS (SELECT ed.dst, CAST(sum(r.r // ed.outdeg) AS BIGINT) AS in_c "
-            f"FROM ed JOIN {prev} r ON ed.src = r.v GROUP BY ed.dst)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT verts.v, CAST(verts.is_seed * {TELEPORT_MICRO}"
-            f" + (85 * coalesce(c{i}.in_c, 0)) // 100 AS BIGINT) AS r"
-            f" FROM verts LEFT JOIN c{i} ON verts.v = c{i}.dst)"
-        )
-        prev = f"r{i}"
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT v AS {id_col}, r AS trust_micro FROM {prev}"
-    )
-
-
 # walk-step mixing constants (same public Lehmer family as _A/_B; the mix
 # only needs to be well-spread mod small out-degrees, not cryptographic)
 _W1 = 48271
@@ -716,7 +583,6 @@ def random_walks(
     edges: DataFrame,
     id_col: str = "doc_id",
     n_steps: int = 4,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Deterministic uniform random walks — the node2vec/DeepWalk corpus
     generator: one walk per row of ``nodes``, ``n_steps`` hops, output
@@ -768,8 +634,7 @@ def random_walks(
                 "walk_id", F.lit(t).cast("long").alias("step"), F.col("dst").alias("node")
             )
         )
-        if t % checkpoint_every == 0 and t < n_steps:
-            stepped = stepped.localCheckpoint(eager=True)
+        stepped = _bound_depth(stepped, t - 1, n_steps)
         out = out.unionByName(stepped)
         pos = stepped
     return out

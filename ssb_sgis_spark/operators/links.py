@@ -5,7 +5,7 @@ front half the id-law citation graph (operators/linkgraph.py) skips.
 from page bytes the way a crawl pipeline does: parse ``<a href>``
 anchors out of html, resolve each href to a host, contract page→page
 links into a weighted host→host graph, and rank hosts with the weighted
-integer PageRank (``linkgraph.pagerank_weighted``) — the domain-level
+integer PageRank (``linkgraph.pagerank(weight_col=)``) — the domain-level
 centrality score (CC-rank style) used for crawl prioritization and
 quality weighting.
 

@@ -8,11 +8,12 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -33,9 +34,15 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}")
+        return 2
+
+    from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -52,7 +59,6 @@ def main() -> int:
             f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():

@@ -52,7 +52,7 @@ def test_weighted_pagerank_properties(spark):
     from ssb_sgis_spark.operators.linkgraph import (
         R0_MICRO,
         TELEPORT_MICRO,
-        pagerank_weighted,
+        pagerank,
     )
 
     n = 8
@@ -60,20 +60,27 @@ def test_weighted_pagerank_properties(spark):
         [(i, (i + 1) % n, 1) for i in range(n)], "src int, dst int, w int"
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], "host int")
-    r = {x.host: x.rank_micro for x in pagerank_weighted(nodes, ring, n_iter=4).collect()}
+    r = {
+        x.host: x.rank_micro
+        for x in pagerank(nodes, ring, id_col="host", n_iter=4, weight_col="w").collect()
+    }
     assert set(r.values()) == {R0_MICRO}
 
     # 9 has out-links but no in-links
     edges = ring.union(spark.createDataFrame([(9, 0, 5)], ring.schema))
     nodes2 = nodes.union(spark.createDataFrame([(9,)], nodes.schema))
-    r2 = {x.host: x.rank_micro for x in pagerank_weighted(nodes2, edges, n_iter=4).collect()}
+    r2 = {
+        x.host: x.rank_micro
+        for x in pagerank(nodes2, edges, id_col="host", n_iter=4, weight_col="w").collect()
+    }
     assert r2[9] == TELEPORT_MICRO
 
 
 def test_weighted_pagerank_matches_multiedge(spark):
     """Weight semantics: w parallel unit edges ≡ one edge with weight w
-    (pagerank vs pagerank_weighted on the expanded/contracted graphs)."""
-    from ssb_sgis_spark.operators.linkgraph import pagerank, pagerank_weighted
+    (pagerank vs pagerank(weight_col="w") on the expanded/contracted
+    graphs)."""
+    from ssb_sgis_spark.operators.linkgraph import pagerank
 
     pairs = [(0, 1, 2), (0, 2, 1), (1, 2, 3), (2, 0, 1), (3, 0, 2), (1, 3, 1)]
     contracted = spark.createDataFrame(pairs, "src int, dst int, w int")
@@ -84,6 +91,8 @@ def test_weighted_pagerank_matches_multiedge(spark):
     a = {r.v: r.rank_micro for r in pagerank(nodes, expanded, id_col="v", n_iter=4).collect()}
     b = {
         r.v: r.rank_micro
-        for r in pagerank_weighted(nodes, contracted, id_col="v", n_iter=4).collect()
+        for r in pagerank(
+            nodes, contracted, id_col="v", n_iter=4, weight_col="w"
+        ).collect()
     }
     assert a == b

@@ -2,7 +2,9 @@
 
 from collections import Counter
 
-from ssb_sgis_spark.operators.linkgraph import label_propagation
+import pytest
+
+from ssb_sgis_spark.operators.linkgraph import CHECKPOINT_EVERY, label_propagation
 
 
 def _reference_lpa(node_ids, edge_list, n_iter):
@@ -45,12 +47,14 @@ def test_isolated_node_keeps_own_label(spark):
     assert got[99] == 99
 
 
-def test_matches_reference_on_law_graph(spark):
+# CHECKPOINT_EVERY + 1 rounds cut the lazy plan once mid-loop
+@pytest.mark.parametrize("n_iter", [4, CHECKPOINT_EVERY + 1])
+def test_matches_reference_on_law_graph(spark, n_iter):
     from ssb_sgis_spark.operators.linkgraph import link_edges
 
     nodes = list(range(120))
     ndf = spark.createDataFrame([(v,) for v in nodes], ["doc_id"])
     edges = [(r.src, r.dst) for r in link_edges(ndf, n=120).collect()]
-    got = _run(spark, nodes, edges, n_iter=4)
-    assert got == _reference_lpa(nodes, edges, 4)
+    got = _run(spark, nodes, edges, n_iter=n_iter)
+    assert got == _reference_lpa(nodes, edges, n_iter)
     assert len(set(got.values())) > 1  # non-trivial community structure

@@ -193,6 +193,17 @@ def test_connected_components_chain(spark):
     assert all(r["component"] == 0 for r in rows)
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    """One round cannot settle a 40-node path: labels still change in
+    the last round, so the call raises instead of returning them."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "src long, dst long"
+    )
+    verts = spark.range(40)
+    with pytest.raises(RuntimeError, match=r"max_iter=1\b.*round 1\b"):
+        connected_components(edges, verts, id_col="id", max_iter=1)
+
+
 def test_cluster_points_within_distance_vs_union_find(spark):
     rng = np.random.RandomState(5)
     n = 120

@@ -141,9 +141,10 @@ _EAGER_QUERIES = {
     "host_rank", "warc_roundtrip",
 }
 # stream_topk drives a streaming query at construction like stream_hex
-# host_rank iterates pagerank_weighted with eager per-round checkpoints
-# (pagerank's pattern); its pre-loop shapes (JVM regex extract, map-side
-# combined host contraction) are asserted in test_host_rank_contraction
+# host_rank eagerly checkpoints the contracted host graph at
+# construction, then chains pagerank(weight_col=) rounds lazily; its
+# pre-loop shapes (JVM regex extract, map-side combined host
+# contraction) are asserted in test_host_rank_contraction
 # warc_roundtrip writes + reads real .warc.gz segments at construction;
 # the returned plan is a binaryFile scan + mapInPandas parse, joinless
 # bpe_merges collects a one-row argmax per round and returns a
@@ -332,9 +333,12 @@ def test_pagerank_round_plan(spark):
 
     docs = spark.range(1000).select(F.col("id").alias("doc_id"))
     edges = link_edges(docs, n=1000)
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges_d = edges.join(deg, "src")
-    verts = docs.select(F.col("doc_id").alias("v"))
+    edges_w = edges.select("src", "dst", F.lit(1).alias("w"))
+    outw = edges_w.groupBy("src").agg(F.sum("w").alias("outw"))
+    edges_d = edges_w.join(outw, "src")
+    verts = docs.select(
+        F.col("doc_id").alias("v"), F.lit(1).cast("long").alias("is_seed")
+    )
     ranks = verts.select("v", F.lit(1_000_000).cast("long").alias("r"))
     p = plan_of(pagerank_round(edges_d, verts, ranks))
     assert "BroadcastNestedLoopJoin" not in p

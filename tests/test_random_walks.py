@@ -1,6 +1,14 @@
 """Deterministic random walks (operators/linkgraph.random_walks)."""
 
-from ssb_sgis_spark.operators.linkgraph import _W1, _W2, _W3, random_walks
+import pytest
+
+from ssb_sgis_spark.operators.linkgraph import (
+    CHECKPOINT_EVERY,
+    _W1,
+    _W2,
+    _W3,
+    random_walks,
+)
 
 
 def _reference(node_ids, edge_list, n_steps):
@@ -29,12 +37,14 @@ def _run(spark, node_ids, edge_list, n_steps):
     return {(r.walk_id, r.step, r.node) for r in got}
 
 
-def test_matches_python_reference(spark):
+# CHECKPOINT_EVERY + 1 steps cut the lazy plan once mid-walk
+@pytest.mark.parametrize("n_steps", [4, CHECKPOINT_EVERY + 1])
+def test_matches_python_reference(spark, n_steps):
     nodes = list(range(15))
     edges = [(i, (i * 3 + 1) % 15) for i in nodes] + [
         (i, (i * 7 + 2) % 15) for i in range(0, 15, 2)
     ]
-    assert _run(spark, nodes, edges, 4) == _reference(nodes, edges, 4)
+    assert _run(spark, nodes, edges, n_steps) == _reference(nodes, edges, n_steps)
 
 
 def test_walks_stop_at_dead_ends(spark):

@@ -1,9 +1,12 @@
-"""TrustRank / seeded PageRank (operators/linkgraph.pagerank_seeded)."""
+"""TrustRank / seeded PageRank (operators/linkgraph.pagerank(seeds=))."""
+
+import pytest
 
 from ssb_sgis_spark.operators.linkgraph import (
+    CHECKPOINT_EVERY,
     R0_MICRO,
     TELEPORT_MICRO,
-    pagerank_seeded,
+    pagerank,
 )
 
 
@@ -28,8 +31,8 @@ def _run(spark, node_ids, edge_list, seed_ids, n_iter):
     nodes = spark.createDataFrame([(v,) for v in node_ids], ["doc_id"])
     edges = spark.createDataFrame(edge_list, ["src", "dst"])
     seeds = spark.createDataFrame([(v,) for v in seed_ids], ["doc_id"])
-    got = pagerank_seeded(nodes, edges, seeds, n_iter=n_iter).collect()
-    return {r.doc_id: r.trust_micro for r in got}
+    got = pagerank(nodes, edges, n_iter=n_iter, seeds=seeds).collect()
+    return {r.doc_id: r.rank_micro for r in got}
 
 
 def test_unreachable_nodes_settle_at_exactly_zero(spark):
@@ -39,12 +42,23 @@ def test_unreachable_nodes_settle_at_exactly_zero(spark):
     assert got[0] > got[1] > got[2] > 0
 
 
-def test_matches_python_reference_on_a_small_graph(spark):
+# CHECKPOINT_EVERY + 1 rounds cut the lazy plan once mid-loop
+@pytest.mark.parametrize("n_iter", [4, CHECKPOINT_EVERY + 1])
+def test_matches_python_reference_on_a_small_graph(spark, n_iter):
     nodes = list(range(12))
     edges = [(i, (i * 5 + 1) % 12) for i in nodes] + [(0, 3), (3, 7)]
     seeds = [0, 6]
-    got = _run(spark, nodes, edges, seeds, 4)
-    assert got == _reference(nodes, edges, set(seeds), 4)
+    got = _run(spark, nodes, edges, seeds, n_iter)
+    assert got == _reference(nodes, edges, set(seeds), n_iter)
+
+
+def test_seeding_every_node_is_uniform_pagerank(spark):
+    nodes = list(range(12))
+    edges = [(i, (i * 5 + 1) % 12) for i in nodes] + [(0, 3), (3, 7)]
+    ndf = spark.createDataFrame([(v,) for v in nodes], ["doc_id"])
+    edf = spark.createDataFrame(edges, ["src", "dst"])
+    plain = {r.doc_id: r.rank_micro for r in pagerank(ndf, edf, n_iter=4).collect()}
+    assert _run(spark, nodes, edges, nodes, 4) == plain
 
 
 def test_seed_scores_dominate_a_spam_farm(spark):
