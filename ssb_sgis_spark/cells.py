@@ -30,7 +30,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .kernels.geom import points_in_polygon
+from .kernels.geom import bounds as geom_bounds, points_in_polygon, ring_edges
 from .kernels.wkb import GeomArray
 
 # Domain: EPSG:25833-style planar metres.  A 2^23 m (~8389 km) square
@@ -63,6 +63,27 @@ def morton_np(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
     return (_interleave_bits_np(ix) | (_interleave_bits_np(iy) << np.uint64(1))).astype(
         np.int64
     )
+
+
+def _compact_bits_np(v: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`_interleave_bits_np`: gather the even bits of v
+    into its low 32 bits."""
+    v = v & np.uint64(0x5555555555555555)
+    v = (v | (v >> np.uint64(1))) & np.uint64(0x3333333333333333)
+    v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
+    v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
+    v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
+    return v
+
+
+def cell_box(cell: int, res: int) -> tuple[float, float, float, float]:
+    """``(x0, y0, x1, y1)`` of the Morton cell ``cell`` at ``res``."""
+    v = np.uint64(cell)
+    s = cell_size(res)
+    x0 = DOMAIN_X0 + int(_compact_bits_np(v)) * s
+    y0 = DOMAIN_Y0 + int(_compact_bits_np(v >> np.uint64(1))) * s
+    return x0, y0, x0 + s, y0 + s
 
 
 def cell_of_xy_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
@@ -234,11 +255,11 @@ def _classify_box(edges, box) -> int:
 
 def polygon_cover(edges, bbox, res: int, coarse_res: int = 6) -> CellCover:
     """Quadtree cover of one polygon (given as edge arrays + bbox) at
-    resolution ``res``: recursive quartering from ``coarse_res``; cells
-    fully inside are emitted early (as all their res-level descendants? no —
-    kept at res via enumeration) … we emit FULL cells *at their coarse
-    level expanded to res-level ranges* is the later optimization; round 1
-    expands to the fixed resolution so the join is a plain hash equi-join.
+    resolution ``res``: recursive quartering from ``coarse_res``.  A box
+    entirely inside the polygon stops the recursion at its own level and
+    is kept compact, as the one morton range of its res-level descendants
+    (``CellCover.full_ranges``); boundary boxes recurse down to ``res``
+    and become PARTIAL cells.
     """
     minx, miny, maxx, maxy = bbox
     full: list[np.ndarray] = []
@@ -292,24 +313,14 @@ def polygon_cover(edges, bbox, res: int, coarse_res: int = 6) -> CellCover:
 
 def covers_for_polygons(ga: GeomArray, res: int):
     """Per-geometry covers for a polygon batch.  Returns list of
-    (row, CellCover, edges) where edges are the row's (x1,y1,x2,y2)."""
-    from .kernels.geom import bounds as _bounds
-
-    bbs = _bounds(ga)
+    (row, CellCover, edges) where edges are the row's
+    :func:`~.kernels.geom.ring_edges` (None for an empty row)."""
+    bbs = geom_bounds(ga)
+    empty = CellCover(np.empty((0, 2), np.int64), np.empty(0, np.int64))
     out = []
     for g in range(len(ga)):
-        rings = ga.geom_rings(g)
-        if not rings:
-            out.append(
-                (g, CellCover(np.empty((0, 2), np.int64), np.empty(0, np.int64)), None)
-            )
-            continue
-        x1 = np.concatenate([r[:-1, 0] for r in rings])
-        y1 = np.concatenate([r[:-1, 1] for r in rings])
-        x2 = np.concatenate([r[1:, 0] for r in rings])
-        y2 = np.concatenate([r[1:, 1] for r in rings])
-        edges = (x1, y1, x2, y2)
-        cover = polygon_cover(edges, tuple(bbs[g]), res)
+        edges = ring_edges(ga.geom_rings(g))
+        cover = empty if edges is None else polygon_cover(edges, tuple(bbs[g]), res)
         out.append((g, cover, edges))
     return out
 

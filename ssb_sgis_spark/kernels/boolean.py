@@ -36,12 +36,13 @@ area-level, not bit-level, for the boundary itself.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 
+from .geom import points_in_polygon, ring_edges
+
 SNAP = 1e-6  # vertex quantum for connectivity keys (default grid size)
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -79,28 +80,6 @@ def polygon_area(parts: list[list[np.ndarray]]) -> float:
         for i, r in enumerate(rings):
             a += abs(ring_signed_area(r)) * (1.0 if i == 0 else -1.0)
     return a
-
-
-def _poly_edges(rings: list[np.ndarray]):
-    """Edge arrays (x1,y1,x2,y2) of one polygon (all rings)."""
-    xs1 = np.concatenate([r[:-1, 0] for r in rings])
-    ys1 = np.concatenate([r[:-1, 1] for r in rings])
-    xs2 = np.concatenate([r[1:, 0] for r in rings])
-    ys2 = np.concatenate([r[1:, 1] for r in rings])
-    return xs1, ys1, xs2, ys2
-
-
-def _pip_many(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
-    """Crossing-parity containment of many points vs one polygon edge set."""
-    x1, y1, x2, y2 = edges
-    if len(x1) == 0:
-        return np.zeros(len(px), dtype=bool)
-    pyc = py[:, None]
-    pxc = px[:, None]
-    straddle = (y1[None, :] > pyc) != (y2[None, :] > pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (x2 - x1)[None, :] * (pyc - y1[None, :]) / (y2 - y1)[None, :] + x1[None, :]
-    return ((straddle & (pxc < xint)).sum(axis=1) % 2).astype(bool)
 
 
 # ----------------------------------------------------------- edge splitting
@@ -290,8 +269,8 @@ def _fast_no_crossing(pa: list[np.ndarray], pb: list[np.ndarray], op: str):
     touches, or an op case that needs ring surgery).  This is the dominant
     case in overlay workloads (a small feature entirely inside a big tile)
     and turns ~1 ms of arrangement into ~30 µs of numpy."""
-    ea = _poly_edges(pa)
-    eb = _poly_edges(pb)
+    ea = ring_edges(pa)
+    eb = ring_edges(pb)
     ba = _edge_bboxes(*ea)
     bb = _edge_bboxes(*eb)
     # total-bbox disjoint?
@@ -316,8 +295,8 @@ def _fast_no_crossing(pa: list[np.ndarray], pb: list[np.ndarray], op: str):
             if proper.any() or touching.any() or collinear.any():
                 return None  # boundaries interact -> full kernel
         crossings = False
-    a_in_b = bool(_pip_many(ea[0][:1], ea[1][:1], eb)[0])
-    b_in_a = bool(_pip_many(eb[0][:1], eb[1][:1], ea)[0])
+    a_in_b = bool(points_in_polygon(ea[0][:1], ea[1][:1], eb)[0])
+    b_in_a = bool(points_in_polygon(eb[0][:1], eb[1][:1], ea)[0])
     if (a_in_b or b_in_a) and (len(pa) > 1 or len(pb) > 1):
         # containment with holes: the inner polygon may contain the outer's
         # hole ring without any boundary crossing — needs the full kernel
@@ -397,7 +376,7 @@ def overlay_parts(
     pid = 0
     for grp_flag, rings in polys:
         soup.add_polygon(pid, rings)
-        per_poly_edges.append(_poly_edges(rings))
+        per_poly_edges.append(ring_edges(rings))
         groups.append(grp_flag)
         pid += 1
     groups_arr = np.asarray(groups, dtype=np.int8)
@@ -451,18 +430,18 @@ def overlay_parts(
     for p in range(pid):
         g = groups_arr[p]
         e = per_poly_edges[p]
-        bx0 = e[0].min() if len(e[0]) else 0.0
-        bx1 = e[0].max() if len(e[0]) else 0.0
-        by0 = min(e[1].min(), e[3].min()) if len(e[1]) else 0.0
-        by1 = max(e[1].max(), e[3].max()) if len(e[1]) else 0.0
-        bx0 = min(bx0, e[2].min()) if len(e[2]) else bx0
-        bx1 = max(bx1, e[2].max()) if len(e[2]) else bx1
+        if e is None:
+            continue
+        bx0 = min(e[0].min(), e[2].min())
+        bx1 = max(e[0].max(), e[2].max())
+        by0 = min(e[1].min(), e[3].min())
+        by1 = max(e[1].max(), e[3].max())
         mL = (lxp >= bx0) & (lxp <= bx1) & (lyp >= by0) & (lyp <= by1)
         mR = (rxp >= bx0) & (rxp <= bx1) & (ryp >= by0) & (ryp <= by1)
         if mL.any():
-            covL[g][mL] += _pip_many(lxp[mL], lyp[mL], e).astype(np.int32)
+            covL[g][mL] += points_in_polygon(lxp[mL], lyp[mL], e).astype(np.int32)
         if mR.any():
-            covR[g][mR] += _pip_many(rxp[mR], ryp[mR], e).astype(np.int32)
+            covR[g][mR] += points_in_polygon(rxp[mR], ryp[mR], e).astype(np.int32)
 
     def inside(cov):
         a = cov[0] >= 1
@@ -557,20 +536,20 @@ def _assemble_polygons(rings: list[np.ndarray]) -> list[list[np.ndarray]]:
     if not exts:
         return []
     parts: list[list[np.ndarray]] = [[r] for _, r in exts]
-    ext_edges = [_poly_edges([r]) for _, r in exts]
+    ext_edges = [ring_edges([r]) for _, r in exts]
     areas = np.array([a for a, _ in exts])
     for h in holes:
         px = np.array([h[0, 0]])
         py = np.array([h[0, 1]])
         containing = [
-            i for i in range(len(exts)) if _pip_many(px, py, ext_edges[i])[0]
+            i for i in range(len(exts)) if points_in_polygon(px, py, ext_edges[i])[0]
         ]
         if not containing:
             # hole's corner is exactly on an exterior vertex: test midpoint
             px = np.array([(h[0, 0] + h[1, 0]) / 2.0])
             py = np.array([(h[0, 1] + h[1, 1]) / 2.0])
             containing = [
-                i for i in range(len(exts)) if _pip_many(px, py, ext_edges[i])[0]
+                i for i in range(len(exts)) if points_in_polygon(px, py, ext_edges[i])[0]
             ]
         if containing:
             best = min(containing, key=lambda i: areas[i])
@@ -583,9 +562,9 @@ def parts_intersect(a: list[list[np.ndarray]], b: list[list[np.ndarray]]) -> boo
     any boundary edges cross, or one polygon's vertex lies inside the other.
     The predicate behind get_polygon_clusters / get_intersections
     (reference STRtree query ``duplicates.py:276-277``)."""
-    ea = _poly_edges([r for rings in a for r in rings])
-    eb = _poly_edges([r for rings in b for r in rings])
-    if len(ea[0]) == 0 or len(eb[0]) == 0:
+    ea = ring_edges([r for rings in a for r in rings])
+    eb = ring_edges([r for rings in b for r in rings])
+    if ea is None or eb is None:
         return False
     ba = _edge_bboxes(*ea)
     bb = _edge_bboxes(*eb)
@@ -602,13 +581,13 @@ def parts_intersect(a: list[list[np.ndarray]], b: list[list[np.ndarray]]) -> boo
         px = np.array([rings_a[0][0, 0]])
         py = np.array([rings_a[0][0, 1]])
         for rings_b in b:
-            if _pip_many(px, py, _poly_edges(rings_b))[0]:
+            if points_in_polygon(px, py, ring_edges(rings_b))[0]:
                 return True
     for rings_b in b:
         px = np.array([rings_b[0][0, 0]])
         py = np.array([rings_b[0][0, 1]])
         for rings_a in a:
-            if _pip_many(px, py, _poly_edges(rings_a))[0]:
+            if points_in_polygon(px, py, ring_edges(rings_a))[0]:
                 return True
     return False
 

@@ -161,6 +161,24 @@ def centroid(ga: GeomArray) -> np.ndarray:
 
 
 # ------------------------------------------------------------ ring plumbing
+def ring_edges(rings: list[np.ndarray]):
+    """Directed edge arrays ``(x1, y1, x2, y2)`` of closed (k, 2) rings —
+    the one polygon edge format of the engine.  Pass every ring of a
+    polygon (holes included: crossing parity handles them).  Returns None
+    when the rings hold no edge."""
+    if not rings:
+        return None
+    x1 = np.concatenate([r[:-1, 0] for r in rings])
+    if not len(x1):
+        return None
+    return (
+        x1,
+        np.concatenate([r[:-1, 1] for r in rings]),
+        np.concatenate([r[1:, 0] for r in rings]),
+        np.concatenate([r[1:, 1] for r in rings]),
+    )
+
+
 def points_in_polygon(
     px: np.ndarray,
     py: np.ndarray,
@@ -187,32 +205,41 @@ def points_in_polygon(
 def points_in_polygon_grouped(
     px: np.ndarray,
     py: np.ndarray,
-    poly_keys: np.ndarray,
-    edge_table: dict,
+    poly_rows: np.ndarray,
+    edge_table,
+    max_dist2: float | None = None,
 ) -> np.ndarray:
-    """PIP for candidate pairs: point i is tested against polygon
-    ``poly_keys[i]``; ``edge_table`` maps key -> (x1, y1, x2, y2).
+    """Refine kernel for candidate pairs: point i is tested against the
+    polygon at row ``poly_rows[i]`` of ``edge_table`` (a sequence of
+    :func:`ring_edges` tuples, None for an empty polygon).
 
-    Groups pairs by polygon so each polygon's edges are streamed once —
-    this is the refine kernel of the spatial join (reference semantics:
-    STRtree candidate pairs -> exact predicate,
-    ``sgis/geopandas_tools/sfilter.py:46-64``).
+    Without ``max_dist2`` the predicate is PIP — the spatial join's refine
+    (reference semantics: STRtree candidate pairs -> exact predicate,
+    ``sgis/geopandas_tools/sfilter.py:46-64``).  With it, a point also
+    matches when its squared boundary distance is <= ``max_dist2`` — the
+    refine of get_neighbor_indices(max_distance=...) (the reference
+    buffers the left side, ``neighbors.py:101-102``; buffering the point
+    by d ≡ distance-d test against the polygon).
+
+    Pairs are grouped by polygon row so each polygon's edges are streamed
+    once.
     """
     result = np.zeros(len(px), dtype=bool)
     if len(px) == 0:
         return result
-    order = np.argsort(poly_keys, kind="stable")
-    sorted_keys = poly_keys[order]
-    boundaries = np.flatnonzero(np.concatenate([[True], sorted_keys[1:] != sorted_keys[:-1]]))
-    boundaries = np.concatenate([boundaries, [len(sorted_keys)]])
-    for b in range(len(boundaries) - 1):
-        lo, hi = boundaries[b], boundaries[b + 1]
-        idx = order[lo:hi]
-        key = sorted_keys[lo]
-        edges = edge_table.get(key)
+    order = np.argsort(poly_rows, kind="stable")
+    sorted_rows = poly_rows[order]
+    boundaries = np.flatnonzero(np.concatenate([[True], sorted_rows[1:] != sorted_rows[:-1]]))
+    boundaries = np.concatenate([boundaries, [len(sorted_rows)]])
+    for lo, hi in zip(boundaries[:-1], boundaries[1:]):
+        edges = edge_table[sorted_rows[lo]]
         if edges is None:
             continue
-        result[idx] = points_in_polygon(px[idx], py[idx], edges)
+        idx = order[lo:hi]
+        hit = points_in_polygon(px[idx], py[idx], edges)
+        if max_dist2 is not None:
+            hit |= point_to_edges_dist2(px[idx], py[idx], edges) <= max_dist2
+        result[idx] = hit
     return result
 
 
@@ -241,39 +268,6 @@ def point_to_edges_dist2(
     dx = apx - t * abx
     dy = apy - t * aby
     return (dx * dx + dy * dy).min(axis=1)
-
-
-def points_near_polygon_grouped(
-    px: np.ndarray,
-    py: np.ndarray,
-    poly_keys: np.ndarray,
-    edge_table: dict,
-    max_dist2: float,
-) -> np.ndarray:
-    """Within-distance predicate for candidate pairs: point i matches
-    polygon poly_keys[i] iff inside OR boundary distance² <= max_dist2 —
-    the refine kernel of get_neighbor_indices(max_distance=...)
-    (reference buffers the left side, ``neighbors.py:101-102``; buffering
-    the point by d ≡ distance-d test against the polygon)."""
-    result = np.zeros(len(px), dtype=bool)
-    if len(px) == 0:
-        return result
-    order = np.argsort(poly_keys, kind="stable")
-    sorted_keys = poly_keys[order]
-    boundaries = np.flatnonzero(
-        np.concatenate([[True], sorted_keys[1:] != sorted_keys[:-1]])
-    )
-    boundaries = np.concatenate([boundaries, [len(sorted_keys)]])
-    for b in range(len(boundaries) - 1):
-        lo, hi = boundaries[b], boundaries[b + 1]
-        idx = order[lo:hi]
-        edges = edge_table.get(sorted_keys[lo])
-        if edges is None:
-            continue
-        inside = points_in_polygon(px[idx], py[idx], edges)
-        near = point_to_edges_dist2(px[idx], py[idx], edges) <= max_dist2
-        result[idx] = inside | near
-    return result
 
 
 # -------------------------------------------------------------- distances

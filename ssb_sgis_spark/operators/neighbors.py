@@ -25,25 +25,17 @@ from pyspark.sql import types as T
 
 from ..kernels import wkb
 from ..kernels.boolean import difference, parts_intersect, polygon_area
-from ..kernels.geom import point_to_edges_dist2
+from ..kernels.geom import point_to_edges_dist2, ring_edges
 from .geomtable import with_bounds
 from .overlay import candidate_pairs
 
 
-def _parts_edges(parts):
-    rings = [r for rings in parts for r in rings]
-    if not rings:
-        return None
-    return (
-        np.concatenate([r[:-1, 0] for r in rings]),
-        np.concatenate([r[:-1, 1] for r in rings]),
-        np.concatenate([r[1:, 0] for r in rings]),
-        np.concatenate([r[1:, 1] for r in rings]),
-    )
+def _parts_rings(parts):
+    return [r for rings in parts for r in rings]
 
 
 def _parts_verts(parts):
-    rings = [r for rings in parts for r in rings]
+    rings = _parts_rings(parts)
     return (
         np.concatenate([r[:, 0] for r in rings]),
         np.concatenate([r[:, 1] for r in rings]),
@@ -55,7 +47,7 @@ def parts_distance2(a, b) -> float:
     they intersect, else the vertex↔edge minimum checked both ways."""
     if parts_intersect(a, b):
         return 0.0
-    ea, eb = _parts_edges(a), _parts_edges(b)
+    ea, eb = ring_edges(_parts_rings(a)), ring_edges(_parts_rings(b))
     va, vb = _parts_verts(a), _parts_verts(b)
     best = np.inf
     if eb is not None and len(va[0]):

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 
 from ..kernels import wkb
 from ..kernels.boolean import ring_signed_area
-from ..kernels.geom import area as geom_area, length as geom_length
+from ..kernels.geom import area as geom_area, length as geom_length, ring_edges
 
 
 def _map_geoms(df: DataFrame, fn, geometry_col: str = "geometry") -> DataFrame:
@@ -203,13 +203,7 @@ def to_lines_split(*dfs: DataFrame, geometry_col: str = "geometry") -> DataFrame
                 for r in part:
                     if len(r) >= 2:
                         rsegs.append(r)
-        if rsegs:
-            rx1 = np.concatenate([r[:-1, 0] for r in rsegs])
-            ry1 = np.concatenate([r[:-1, 1] for r in rsegs])
-            rx2 = np.concatenate([r[1:, 0] for r in rsegs])
-            ry2 = np.concatenate([r[1:, 1] for r in rsegs])
-        else:
-            rx1 = ry1 = rx2 = ry2 = np.empty(0)
+        rx1, ry1, rx2, ry2 = ring_edges(rsegs) or (np.empty(0),) * 4
         pieces = []
         for pl in lines:
             n = len(pl) - 1

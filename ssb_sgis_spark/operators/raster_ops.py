@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import wkb
-from ..kernels.geom import bounds as geom_bounds, points_in_polygon
+from ..kernels.geom import points_in_polygon
+from .sjoin import _decode_polygon_boxes
 
 _TILE_SCHEMA = (
     "tile_ix int, tile_iy int, nx int, ny int, payload binary"
@@ -45,27 +46,6 @@ def _decode_payload(row, dtype="<i4") -> np.ndarray:
     return np.frombuffer(bytes(row["payload"]), dtype=dtype).reshape(
         row["ny"], row["nx"]
     )
-
-
-def _collect_poly_edges(polygons: DataFrame, value_col: str, geometry_col: str):
-    """Driver-side (value, bbox, edge-arrays) list for broadcast — the
-    polygon side of a rasterize is the small side by design."""
-    rows = polygons.select(value_col, geometry_col).collect()
-    ga = wkb.decode([r[geometry_col] for r in rows])
-    bbs = geom_bounds(ga)
-    polys = []
-    for i, r in enumerate(rows):
-        rings = ga.geom_rings(i)
-        if not rings:
-            continue
-        edges = (
-            np.concatenate([rr[:-1, 0] for rr in rings]),
-            np.concatenate([rr[:-1, 1] for rr in rings]),
-            np.concatenate([rr[1:, 0] for rr in rings]),
-            np.concatenate([rr[1:, 1] for rr in rings]),
-        )
-        polys.append((int(r[value_col]), tuple(bbs[i]), edges))
-    return polys
 
 
 def _burn_tile(tile_ix, tile_iy, tile, ncx, ncy, x0, y0, res, fill, polys):
@@ -85,7 +65,7 @@ def _burn_tile(tile_ix, tile_iy, tile, ncx, ncy, x0, y0, res, fill, polys):
         if bb[0] > tx1 or bb[2] < tx0 or bb[1] > ty1 or bb[3] < ty0:
             continue
         mask = points_in_polygon(cx.ravel(), cy.ravel(), edges).reshape(cx.shape)
-        vals[mask] = val
+        vals[mask] = int(val)
     return ix0, iy0, vals
 
 
@@ -121,7 +101,7 @@ def rasterize_cells_df(
 
     spark = polygons.sparkSession
     bc = spark.sparkContext.broadcast(
-        _collect_poly_edges(polygons, value_col, geometry_col)
+        _decode_polygon_boxes(polygons, value_col, geometry_col)
     )
     ntx = math.ceil(ncx / tile)
     nty = math.ceil(ncy / tile)
@@ -171,7 +151,7 @@ def rasterize_polygons(
 
     spark = polygons.sparkSession
     bc = spark.sparkContext.broadcast(
-        _collect_poly_edges(polygons, value_col, geometry_col)
+        _decode_polygon_boxes(polygons, value_col, geometry_col)
     )
     ntx = math.ceil(ncx / tile)
     nty = math.ceil(ncy / tile)

@@ -46,8 +46,9 @@ This replaces the reference's STRtree candidate-pair generation
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -55,16 +56,14 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
 
-from ..cells import cell_size, covers_for_polygons, cell_of_xy_col, pick_cover_resolution
+from ..cells import cell_box, covers_for_polygons, cell_of_xy_col, pick_cover_resolution
 from ..kernels import wkb
-from ..kernels.geom import (
-    bounds as geom_bounds,
-    points_near_polygon_grouped,
-)
+from ..kernels.geom import bounds as geom_bounds, points_in_polygon_grouped, ring_edges
 
 # float-rounding guard for the cell-clip edge classification: the oracle's
 # crossing-x formula has absolute error <= ~1e-8 for metre-range coords;
@@ -77,29 +76,32 @@ _PAD_EDGE = (0.0, 0.0, 0.0, 0.0)
 
 
 def _decode_polygon_side(poly_df: DataFrame, key_col: str, geometry_col: str):
-    """Collect + decode the (small) polygon side. Returns
-    (keys, GeomArray, edge_table{key -> (x1,y1,x2,y2)})."""
+    """Collect + decode the (small) polygon side.  Returns
+    ``(keys, GeomArray, edges)``; ``edges[g]`` is row g's
+    :func:`~..kernels.geom.ring_edges` (None for an empty row).  Edges are
+    keyed by polygon ROW, never by key value: two rows may share a key."""
     rows = poly_df.select(key_col, geometry_col).collect()
     keys = [r[0] for r in rows]
     ga = wkb.decode([r[1] for r in rows])
-    edge_table = {}
-    for g, key in enumerate(keys):
-        rings = ga.geom_rings(g)
-        if not rings:
-            continue
-        edge_table[key] = (
-            np.concatenate([r[:-1, 0] for r in rings]),
-            np.concatenate([r[:-1, 1] for r in rings]),
-            np.concatenate([r[1:, 0] for r in rings]),
-            np.concatenate([r[1:, 1] for r in rings]),
-        )
-    return keys, ga, edge_table
+    return keys, ga, [ring_edges(ga.geom_rings(g)) for g in range(len(ga))]
+
+
+def _decode_polygon_boxes(poly_df: DataFrame, key_col: str, geometry_col: str):
+    """``[(key, bbox, edges)]`` of the non-empty polygon rows, in row
+    order — the broadcast polygon side of the raster kernels."""
+    keys, ga, edges = _decode_polygon_side(poly_df, key_col, geometry_col)
+    bbs = geom_bounds(ga)
+    return [
+        (key, tuple(bbs[g]), e)
+        for g, (key, e) in enumerate(zip(keys, edges))
+        if e is not None
+    ]
 
 
 _COVER_SCHEMA = StructType(
     [
         StructField("cell", LongType()),
-        StructField("_key", BooleanType()),  # placeholder; patched per key dtype
+        StructField("_key", BooleanType()),  # placeholder; set by _key_type
         StructField("_full", BooleanType()),
         StructField("_rbase", LongType()),
         StructField("_rb", ArrayType(DoubleType())),
@@ -127,44 +129,18 @@ _COVER_SCHEMA = StructType(
 )
 
 
-def _cover_schema_for(key_example) -> StructType:
-    from pyspark.sql.types import LongType as LT, StringType
-
-    if isinstance(key_example, str):
-        kt = StringType()
-    elif isinstance(key_example, (int, np.integer)):
-        kt = LT()
-    else:
-        kt = StringType()
-    fields = list(_COVER_SCHEMA.fields)
-    fields[1] = StructField("_key", kt)
-    return StructType(fields)
-
-
-def _cell_box(cell: int, res: int):
-    from ..cells import DOMAIN_X0, DOMAIN_Y0
-
-    s = cell_size(res)
-    # deinterleave morton -> (ix, iy)
-    v = np.uint64(cell)
-
-    def compact(u):
-        u = u & np.uint64(0x5555555555555555)
-        u = (u | (u >> np.uint64(1))) & np.uint64(0x3333333333333333)
-        u = (u | (u >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        u = (u | (u >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
-        u = (u | (u >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
-        u = (u | (u >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-        return int(u)
-
-    ix = compact(v)
-    iy = compact(v >> np.uint64(1))
-    x0 = DOMAIN_X0 + ix * s
-    y0 = DOMAIN_Y0 + iy * s
-    return x0, y0, x0 + s, y0 + s
+def _key_type(keys):
+    """Spark type of a polygon key column: long for integer keys, else
+    string."""
+    if keys and isinstance(keys[0], (int, np.integer)):
+        return LongType()
+    return StringType()
 
 
 INF = float("inf")
+
+# the per-row ray-cast state columns of a cover row (module docstring)
+_COVER_STATE = ("_full", "_rbase", "_rb", "_near", "_bx0", "_by0", "_bx1", "_by1")
 
 # codegen-safe bound on the per-row unrolled predicate width: PARTIAL
 # cells whose clipped state exceeds this many near edges / breakpoints
@@ -211,7 +187,7 @@ def build_cover_df(spark, keys, ga, res: int, covers=None,
         eymin = np.minimum(y1, y2)
         eymax = np.maximum(y1, y2)
         for c in cover.partial:
-            clip0 = _cell_box(int(c), res)
+            clip0 = cell_box(int(c), res)
             # (clip box for edge classification, test box for the join
             # predicate — open at borders not created by a bisection)
             stack = [(clip0, (-INF, -INF, INF, INF), 0)]
@@ -286,10 +262,9 @@ def build_cover_df(spark, keys, ga, res: int, covers=None,
     for r in rows:
         r[4] = r[4] + [INF] * (n_rb - len(r[4]))
         r[5] = r[5] + [_PAD_EDGE] * (n_near - len(r[5]))
-    df = spark.createDataFrame(
-        [tuple(r) for r in rows],
-        schema=_cover_schema_for(keys[0] if keys else ""),
-    )
+    fields = list(_COVER_SCHEMA.fields)
+    fields[1] = StructField("_key", _key_type(keys))
+    df = spark.createDataFrame([tuple(r) for r in rows], schema=StructType(fields))
     return df, n_near, n_rb
 
 
@@ -307,10 +282,11 @@ def _in_test_box(x: Column, y: Column) -> Column:
 def _pip_pred_col(x: Column, y: Column, n_near: int, n_rb: int) -> Column:
     """The PIP predicate as a fixed-width unrolled native expression —
     whole-stage-codegen compatible (no higher-order functions), same
-    float64 arithmetic as the numpy kernel (kernels/geom.py:217-226) and
-    the DuckDB oracle.  Padded slots contribute 0 by construction.
-    Guarded by the sub-cell test box so subdivided cover rows stay
-    disjoint (exactly one row matches per point and polygon)."""
+    float64 arithmetic as the numpy kernel
+    :func:`~..kernels.geom.points_in_polygon` and the DuckDB oracle.
+    Padded slots contribute 0 by construction.  Guarded by the sub-cell
+    test box so subdivided cover rows stay disjoint (exactly one row
+    matches per point and polygon)."""
     parity = F.col("_rbase")
     for i in range(1, n_rb + 1):
         parity = parity + (F.element_at(F.col("_rb"), i) <= y).cast("long")
@@ -337,7 +313,7 @@ def _pip_pred_col(x: Column, y: Column, n_near: int, n_rb: int) -> Column:
 _COMPACT_THRESHOLD = 2_000_000
 
 
-def _compact_lookup_tables(keys, covers, res):
+def _compact_lookup_tables(covers):
     """Per-level sorted block arrays + sorted partial-cell array, all
     mapping back to polygon indices."""
     by_level: dict[int, list] = {}
@@ -380,8 +356,7 @@ def _span_expand(lo, hi):
 
 
 def _pip_join_compact(
-    points, keys, ga, edge_table, res, covers,
-    key_col, x_col, y_col, how, id_cols,
+    points, key_col, x_col, y_col, how, id_cols, *, keys, edges, res, covers
 ):
     """Arrow-batched PIP join against a compact (range) cover — used when
     the enumerated cover is too large to broadcast as an equi-join table.
@@ -389,16 +364,15 @@ def _pip_join_compact(
     ancestor lookup for FULL blocks, grouped ray-cast refine for PARTIAL
     cells.  No per-row Python (BASELINE.json input_hint)."""
     from ..cells import cell_of_xy_np
-    from ..kernels.geom import points_in_polygon_grouped
 
     spark = points.sparkSession
-    levels, pcells, pkidx = _compact_lookup_tables(keys, covers, res)
+    levels, pcells, pkidx = _compact_lookup_tables(covers)
     keys_arr = np.asarray(keys, dtype=object)
-    bc = spark.sparkContext.broadcast((levels, pcells, pkidx, keys_arr, edge_table))
+    bc = spark.sparkContext.broadcast((levels, pcells, pkidx, keys_arr, edges))
 
-    out_fields = list(points.schema.fields)
-    key_dt = _cover_schema_for(keys[0] if keys else "").fields[1].dataType
-    out_schema = StructType(out_fields + [StructField(key_col, key_dt)])
+    out_schema = StructType(
+        list(points.schema.fields) + [StructField(key_col, _key_type(keys))]
+    )
 
     def kernel(it):
         levels_, pcells_, pkidx_, keys_, edges_ = bc.value
@@ -420,10 +394,10 @@ def _pip_join_compact(
             hi = np.searchsorted(pcells_, cell, "right")
             ri, fi = _span_expand(lo, hi)
             if len(ri):
-                cand_keys = keys_[pkidx_[fi]]
-                mask = points_in_polygon_grouped(x[ri], y[ri], cand_keys, edges_)
+                cand = pkidx_[fi]
+                mask = points_in_polygon_grouped(x[ri], y[ri], cand, edges_)
                 rows.append(ri[mask])
-                kidx.append(pkidx_[fi][mask])
+                kidx.append(cand[mask])
             if rows:
                 ri = np.concatenate(rows)
                 gi = np.concatenate(kidx)
@@ -458,8 +432,8 @@ def _cover_cache_put(ck, value):
         # order; popitem() would evict the newest)
         old = _COVER_CACHE.pop(next(iter(_COVER_CACHE)))
         try:
-            if old[0] == "enum":
-                old[5].unpersist()
+            if old[1] is not None:
+                old[1].unpersist()
         except Exception:
             pass
     _COVER_CACHE[ck] = value
@@ -509,19 +483,21 @@ def points_in_polygons_join(
     cap = compact_threshold if compact_threshold is not None else _COMPACT_THRESHOLD
     ck = (fp, cache_key, key_col, geometry_col, res, max_distance, cap)
     cached = _COVER_CACHE.get(ck)
-    if cached is not None:
-        if cached[0] == "compact":
-            _, keys, ga, edge_table, res, covers = cached
-            return _pip_join_compact(
-                points, keys, ga, edge_table, res, covers,
-                key_col, x_col, y_col, how, id_cols,
-            )
-        _, keys, ga, edge_table, res, cover_df, n_near, n_rb = cached
-        return _pip_join_with_cover(
-            points, keys, ga, edge_table, res, cover_df, n_near, n_rb,
-            key_col, x_col, y_col, how, max_distance, id_cols,
+    if cached is None:
+        cached = _plan_polygon_side(
+            spark, polygons, key_col, geometry_col, res, max_distance, cap
         )
-    keys, ga, edge_table = _decode_polygon_side(polygons, key_col, geometry_col)
+        _cover_cache_put(ck, cached)
+    join, _ = cached
+    return join(points, key_col, x_col, y_col, how, id_cols)
+
+
+def _plan_polygon_side(spark, polygons, key_col, geometry_col, res, max_distance, cap):
+    """Collect, decode and cover the polygon side once.  Returns
+    ``(join, cover_df)``: ``join(points, key_col, x_col, y_col, how,
+    id_cols)`` runs the point side against it, and ``cover_df`` is the
+    cached broadcast cover (None on the compact path)."""
+    keys, ga, edges = _decode_polygon_side(polygons, key_col, geometry_col)
     if res is None:
         bbs = geom_bounds(ga)
         # typical polygon bbox -> ~16 cells across each polygon
@@ -531,96 +507,95 @@ def points_in_polygons_join(
 
     if max_distance is None:
         covers = covers_for_polygons(ga, res)
-        total_full = sum(c.full_count() for _, c, _ in covers)
-        if total_full > cap:
-            _cover_cache_put(ck, ("compact", keys, ga, edge_table, res, covers))
-            return _pip_join_compact(
-                points, keys, ga, edge_table, res, covers,
-                key_col, x_col, y_col, how, id_cols,
+        if sum(c.full_count() for _, c, _ in covers) > cap:
+            join = partial(
+                _pip_join_compact, keys=keys, edges=edges, res=res, covers=covers
             )
+            return join, None
         cover_df, n_near, n_rb = build_cover_df(spark, keys, ga, res, covers)
-    else:
-        # covers of the buffered polygons (1% oversized: the inscribed
-        # buffer polygon underestimates the true distance band) — sound
-        # candidate superset; every candidate refines exactly below
-        from ..kernels.buffer import buffer_parts
+        cover_df = cover_df.cache()
+        join = partial(
+            _pip_join_with_cover, res=res, cover_df=cover_df, n_near=n_near, n_rb=n_rb
+        )
+        return join, cover_df
 
-        buf_items = []
-        for g, key in enumerate(keys):
-            parts = ga.geom_parts(g)
-            if not parts:
-                continue
-            bp = buffer_parts(parts, wkb.T_POLYGON, max_distance * 1.01, quad_segs=8)
-            buf_items.append((key, bp))
-        bufs = [wkb.encode_geom(bp, wkb.T_POLYGON) for _, bp in buf_items]
-        bga = wkb.decode(bufs)
-        cover_df, n_near, n_rb = build_cover_df(spark, [k for k, _ in buf_items], bga, res)
-        cover_df = cover_df.withColumn("_full", F.lit(False))
+    # covers of the buffered polygons (1% oversized: the inscribed buffer
+    # polygon underestimates the true distance band) — sound candidate
+    # superset; every candidate refines exactly in _pip_join_within.  The
+    # cover's _key is the polygon ROW, so the refine tests each candidate
+    # against its own row's edges even when rows share a key.
+    from ..kernels.buffer import buffer_parts
 
+    rows, bufs = [], []
+    for g in range(len(ga)):
+        parts = ga.geom_parts(g)
+        if not parts:
+            continue
+        bp = buffer_parts(parts, wkb.T_POLYGON, max_distance * 1.01, quad_segs=8)
+        rows.append(g)
+        bufs.append(wkb.encode_geom(bp, wkb.T_POLYGON))
+    cover_df, _, _ = build_cover_df(spark, rows, wkb.decode(bufs), res)
     cover_df = cover_df.cache()
-    _cover_cache_put(ck, ("enum", keys, ga, edge_table, res, cover_df, n_near, n_rb))
-    return _pip_join_with_cover(
-        points, keys, ga, edge_table, res, cover_df, n_near, n_rb,
-        key_col, x_col, y_col, how, max_distance, id_cols,
+    join = partial(
+        _pip_join_within, keys=keys, edges=edges, res=res, cover_df=cover_df,
+        max_dist2=float(max_distance) * float(max_distance),
     )
+    return join, cover_df
 
 
 def _pip_join_with_cover(
-    points, keys, ga, edge_table, res, cover_df, n_near, n_rb,
-    key_col, x_col, y_col, how, max_distance, id_cols=None,
+    points, key_col, x_col, y_col, how, id_cols, *, res, cover_df, n_near, n_rb
 ):
-    spark = points.sparkSession
+    """One codegen'd pass: broadcast hash join on the cell id with the
+    unrolled PIP predicate as the join condition — FULL cells satisfy it
+    via the _full flag, PARTIAL cells via crossing parity."""
     pts = points.withColumn("_cell", cell_of_xy_col(F.col(x_col), F.col(y_col), res))
-
-    if max_distance is None:
-        # one codegen'd pass: broadcast hash join on the cell id with the
-        # unrolled PIP predicate as the join condition — FULL cells satisfy
-        # it via the _full flag, PARTIAL cells via crossing parity
-        pred = _pip_pred_col(F.col(x_col), F.col(y_col), n_near, n_rb)
-        matched = (
-            pts.join(
-                F.broadcast(cover_df),
-                (pts["_cell"] == cover_df["cell"]) & pred,
-                "inner",
-            )
-            .drop("cell", "_cell", "_full", "_rbase", "_rb", "_near",
-                  "_bx0", "_by0", "_bx1", "_by1")
-            .withColumnRenamed("_key", key_col)
-        )
-    else:
-        # distance refine: exact point-to-edge distance kernel (Arrow
-        # batch); the test-box conjunct keeps subdivided cover rows
-        # disjoint (at most one candidate row per point and polygon)
-        cand = pts.join(
+    pred = _pip_pred_col(F.col(x_col), F.col(y_col), n_near, n_rb)
+    matched = (
+        pts.join(
             F.broadcast(cover_df),
-            (pts["_cell"] == cover_df["cell"])
-            & _in_test_box(F.col(x_col), F.col(y_col)),
+            (pts["_cell"] == cover_df["cell"]) & pred,
             "inner",
-        ).drop("cell")
-        partial = cand.drop("_full", "_rbase", "_rb", "_near",
-                            "_bx0", "_by0", "_bx1", "_by1")
-        bc_edges = spark.sparkContext.broadcast(edge_table)
-        out_schema = partial.schema
-        max_d2 = float(max_distance) * float(max_distance)
-
-        def refine(iterator):
-            edges = bc_edges.value
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    yield pdf
-                    continue
-                px = pdf[x_col].to_numpy(dtype=np.float64)
-                py = pdf[y_col].to_numpy(dtype=np.float64)
-                pkeys = pdf["_key"].to_numpy()
-                mask = points_near_polygon_grouped(px, py, pkeys, edges, max_d2)
-                yield pdf[mask]
-
-        matched = (
-            partial.mapInPandas(refine, schema=out_schema)
-            .withColumnRenamed("_key", key_col)
-            .drop("_cell")
         )
+        .drop("cell", "_cell", *_COVER_STATE)
+        .withColumnRenamed("_key", key_col)
+    )
+    return _apply_how(points, matched, key_col, how, id_cols)
 
+
+def _pip_join_within(
+    points, key_col, x_col, y_col, how, id_cols, *, keys, edges, res, cover_df, max_dist2
+):
+    """Distance join: candidates from the buffered cover, refined by the
+    exact point-to-edge distance kernel (Arrow batch).  The test-box
+    conjunct keeps subdivided cover rows disjoint (at most one candidate
+    row per point and polygon)."""
+    pts = points.withColumn("_cell", cell_of_xy_col(F.col(x_col), F.col(y_col), res))
+    cand = pts.join(
+        F.broadcast(cover_df),
+        (pts["_cell"] == cover_df["cell"])
+        & _in_test_box(F.col(x_col), F.col(y_col)),
+        "inner",
+    ).drop("cell", "_cell", *_COVER_STATE)
+    keys_arr = np.asarray(keys, dtype=object)
+    bc = points.sparkSession.sparkContext.broadcast((keys_arr, edges))
+    out_schema = StructType(
+        [f for f in cand.schema.fields if f.name != "_key"]
+        + [StructField(key_col, _key_type(keys))]
+    )
+
+    def refine(iterator):
+        keys_, edges_ = bc.value
+        for pdf in iterator:
+            rows = pdf.pop("_key").to_numpy()
+            px = pdf[x_col].to_numpy(dtype=np.float64)
+            py = pdf[y_col].to_numpy(dtype=np.float64)
+            mask = points_in_polygon_grouped(px, py, rows, edges_, max_dist2)
+            out = pdf[mask].copy()
+            out[key_col] = keys_[rows[mask]]
+            yield out
+
+    matched = cand.mapInPandas(refine, schema=out_schema)
     return _apply_how(points, matched, key_col, how, id_cols)
 
 

@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels import wkb
-from ..kernels.geom import bounds as geom_bounds, points_in_polygon
+from ..kernels.geom import points_in_polygon
 from ..sources.raster import CELL, RZ_X0, RZ_Y0, TILE
+from .sjoin import _decode_polygon_boxes
 
 
 def zonal_stats(
@@ -45,23 +45,9 @@ def zonal_stats(
     file-backed rasters (:mod:`..sources.geotiff`) reuse the same
     kernel; defaults are the synthetic tile source's constants."""
     spark = polygons.sparkSession
-    rows = polygons.select(key_col, geometry_col).collect()
-    keys = [r[0] for r in rows]
-    ga = wkb.decode([r[1] for r in rows])
-    bbs = geom_bounds(ga)
-    polys = []
-    for g, key in enumerate(keys):
-        rings = ga.geom_rings(g)
-        if not rings:
-            continue
-        edges = (
-            np.concatenate([r[:-1, 0] for r in rings]),
-            np.concatenate([r[:-1, 1] for r in rings]),
-            np.concatenate([r[1:, 0] for r in rings]),
-            np.concatenate([r[1:, 1] for r in rings]),
-        )
-        polys.append((key, tuple(bbs[g]), edges))
-    bc = spark.sparkContext.broadcast(polys)
+    bc = spark.sparkContext.broadcast(
+        _decode_polygon_boxes(polygons, key_col, geometry_col)
+    )
 
     schema = T.StructType(
         [

@@ -34,21 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import wkb
 from ..kernels.geom import bounds as geom_bounds, point_to_edges_dist2
-from ..operators.sjoin import points_in_polygons_join
-
-
-def _poly_edges(ga, g):
-    rings = ga.geom_rings(g)
-    if not rings:
-        return None
-    return (
-        np.concatenate([r[:-1, 0] for r in rings]),
-        np.concatenate([r[:-1, 1] for r in rings]),
-        np.concatenate([r[1:, 0] for r in rings]),
-        np.concatenate([r[1:, 1] for r in rings]),
-    )
+from ..operators.sjoin import _decode_polygon_side, points_in_polygons_join
 
 
 def neighbor_munis(
@@ -62,11 +49,8 @@ def neighbor_munis(
     at most), so this runs driver-side on the decoded geometries: each
     polygon pair passes a bbox pre-filter, then vertex-to-edge distance
     both ways (adjacent polygons share vertices or touch edges)."""
-    rows = municipalities.select(muni_number_col, geometry_col).collect()
-    keys = [r[0] for r in rows]
-    ga = wkb.decode([r[1] for r in rows])
+    keys, ga, edges = _decode_polygon_side(municipalities, muni_number_col, geometry_col)
     bbs = geom_bounds(ga)
-    edges = [_poly_edges(ga, g) for g in range(len(ga))]
     verts = [
         (np.concatenate([r[:, 0] for r in ga.geom_rings(g)]),
          np.concatenate([r[:, 1] for r in ga.geom_rings(g)]))

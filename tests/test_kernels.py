@@ -83,19 +83,30 @@ def test_pip_with_hole():
     assert list(geom.points_in_polygon(px, py, edges)) == [True, False, False, True, False]
 
 
-def test_pip_grouped_matches_single():
+@pytest.mark.parametrize("max_dist2", [None, 0.0, 0.25])
+def test_pip_grouped_matches_single(max_dist2):
+    """The grouped refine equals per-polygon PIP (bound None or 0 — no
+    random point lies on an edge), or PIP OR boundary distance² <= bound."""
     rng = np.random.RandomState(7)
     px = rng.rand(500) * 12 - 1
     py = rng.rand(500) * 12 - 1
-    e_sq = (SQ[:-1, 0], SQ[:-1, 1], SQ[1:, 0], SQ[1:, 1])
-    e_tri = (TRI[:-1, 0], TRI[:-1, 1], TRI[1:, 0], TRI[1:, 1])
-    keys = np.where(rng.rand(500) < 0.5, "sq", "tri")
-    grouped = geom.points_in_polygon_grouped(px, py, keys, {"sq": e_sq, "tri": e_tri})
+    e_sq = geom.ring_edges([SQ])
+    e_tri = geom.ring_edges([TRI])
+    rows = np.where(rng.rand(500) < 0.5, 0, 1)
+    grouped = geom.points_in_polygon_grouped(px, py, rows, [e_sq, e_tri], max_dist2)
     single = np.where(
-        keys == "sq",
+        rows == 0,
         geom.points_in_polygon(px, py, e_sq),
         geom.points_in_polygon(px, py, e_tri),
     )
+    if max_dist2:
+        d2 = np.where(
+            rows == 0,
+            geom.point_to_edges_dist2(px, py, e_sq),
+            geom.point_to_edges_dist2(px, py, e_tri),
+        )
+        single |= d2 <= max_dist2
+        assert (grouped != geom.points_in_polygon_grouped(px, py, rows, [e_sq, e_tri])).any()
     assert (grouped == single).all()
 
 

@@ -138,6 +138,43 @@ def test_dense_polygon_bounded_predicate_width(spark, truth):
     assert rows == want_dense
 
 
+def test_duplicate_polygon_keys_agree_across_paths(spark):
+    """Two disjoint polygon rows sharing one key: the enumerated, compact
+    and distance paths must each test a candidate against its OWN row's
+    edges, so all three return the brute-force rows."""
+    from ssb_sgis_spark.kernels import wkb as kwkb
+
+    def square(x0, y0, s):
+        return np.array(
+            [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s), (x0, y0)]
+        )
+
+    squares = [square(260000.0, 6645000.0, 5000.0), square(270000.0, 6645000.0, 5000.0)]
+    polys = spark.createDataFrame(
+        [("a", bytearray(kwkb.encode_polygon([sq]))) for sq in squares],
+        "muni_id string, geometry binary",
+    )
+    rng = np.random.RandomState(11)
+    x = rng.uniform(258000.0, 277000.0, 4000)
+    y = rng.uniform(6643000.0, 6652000.0, 4000)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"uid": np.arange(4000, dtype=np.int64), "x": x, "y": y})
+    )
+    inside = np.zeros(4000, dtype=bool)
+    for sq in squares:
+        inside |= points_in_polygon(x, y, (sq[:-1, 0], sq[:-1, 1], sq[1:, 0], sq[1:, 1]))
+    want = sorted((int(u), "a") for u in np.flatnonzero(inside))
+    assert want
+
+    def rows(**kw):
+        got = points_in_polygons_join(pts, polys, **kw).select("uid", "muni_id")
+        return sorted((r["uid"], r["muni_id"]) for r in got.collect())
+
+    assert rows() == want
+    assert rows(compact_threshold=0) == want
+    assert rows(max_distance=1e-9) == want
+
+
 def test_connected_components_string_ids(spark):
     """String vertex ids must converge correctly (the decimal-cast
     fingerprint regression: NULL sums ended the loop after one round)."""
