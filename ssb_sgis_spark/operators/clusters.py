@@ -11,8 +11,11 @@ driver-side graph nor a global STRtree exists, so:
   Arrow batch, and
 * components are computed by **iterative hash-min label propagation with
   pointer jumping** (label-of-label join each round → O(log diameter)
-  rounds), each iteration ``localCheckpoint``-ed to cut lineage — the
+  rounds), each round ``localCheckpoint``-ed to cut lineage — the
   DataFrame equivalent of map-reduce CC (large-star/small-star family).
+  Every step flags the labels it lowered; an ``Observation`` on the
+  checkpoint job reads the flag, and the loop stops in the first round
+  whose last step lowered none.
 
 ``cluster_points_within_distance`` is the point specialization used by
 buffdissexp-by-cluster pipelines on page points: buffering points by r and
@@ -24,7 +27,7 @@ no geometry ever materializes for the 10^12-point side.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -162,11 +165,24 @@ def connected_components(
 ) -> DataFrame:
     """Label every vertex with min-id of its connected component.
 
+    Components are those of the subgraph induced on ``vertices``: an edge
+    with an endpoint missing from ``vertices`` joins nothing, and labels
+    never propagate through such an endpoint.
+
     Hash-min propagation + pointer jumping, localCheckpoint per round:
-    round = (label ← min(label, neighbors' labels)) ∘ (label ← label of
-    label).  Converges in O(log diameter) rounds; each round is two
-    shuffles on (id) — scale-safe, no driver-side graph (unlike the
-    reference's networkx path, ``polygon_operations.py:147-155``).
+    step = (label ← min(label, neighbors' labels)) ∘ (label ← label of
+    label), two steps per round.  Converges in O(log diameter) rounds;
+    each step is two shuffles on (id) — scale-safe, no driver-side graph
+    (unlike the reference's networkx path,
+    ``polygon_operations.py:147-155``).
+
+    Each step flags the vertices whose label it lowered; the loop stops
+    after the first round whose second step lowered none.  That is a
+    fixed point: both ends of every edge carry the same label, every
+    label is the id of a component member and never exceeds the vertex's
+    own id, so it is the component's min id.  The flag is read by an
+    ``Observation`` on the round's checkpoint job (``max`` is idempotent
+    under stage retries), so a round costs no extra action.
 
     The iterative rounds run ONLY over edge-touched vertices; vertices
     with no incident edge are self-labeled singletons unioned back
@@ -180,9 +196,16 @@ def connected_components(
     Raises ``RuntimeError`` when the labels still change in round
     ``max_iter`` rather than returning unconverged components.
     """
-    sym = edges.selectExpr("src as a", "dst as b").unionAll(
-        edges.selectExpr("dst as a", "src as b")
-    )
+    # both directions from ONE evaluation of ``edges`` (a unionAll of two
+    # selects would run the upstream pair join and refine twice)
+    sym = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("a"), F.col("dst").alias("b")),
+                F.struct(F.col("dst").alias("a"), F.col("src").alias("b")),
+            )
+        ).alias("_e")
+    ).select("_e.a", "_e.b")
     sym = sym.localCheckpoint(eager=True)
     verts = vertices.select(F.col(id_col).alias("v"))
     # edge-touched vertices only (∩ vertices, preserving the contract
@@ -198,44 +221,44 @@ def connected_components(
     )
 
     def step(lbls):
+        """(v, lbl, ...) → (v, lbl, chg): chg marks a label this step lowered."""
         # neighbor min
         nbr_min = (
             sym.join(lbls, sym["b"] == lbls["v"])
             .groupBy("a")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        new = (
-            lbls.join(nbr_min, lbls["v"] == nbr_min["a"], "left")
-            .select(
-                F.col("v"),
-                F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias(
-                    "lbl"
-                ),
-            )
+        new = lbls.join(nbr_min, lbls["v"] == nbr_min["a"], "left").select(
+            F.col("v"),
+            F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
+            F.coalesce(F.col("nlbl") < F.col("lbl"), F.lit(False)).alias("chg"),
         )
         # pointer jumping: lbl <- lbl(lbl)
         l2 = new.selectExpr("v as v2", "lbl as lbl2")
-        return (
-            new.join(l2, new["lbl"] == l2["v2"], "left")
-            .select(F.col("v"), F.coalesce(F.col("lbl2"), F.col("lbl")).alias("lbl"))
+        return new.join(l2, new["lbl"] == l2["v2"], "left").select(
+            F.col("v"),
+            F.coalesce(F.col("lbl2"), F.col("lbl")).alias("lbl"),
+            (F.col("chg") | F.coalesce(F.col("lbl2") < F.col("lbl"), F.lit(False))).alias(
+                "chg"
+            ),
         )
 
-    prev_fp = None
     for _ in range(max_iter):
-        # TWO propagation steps per checkpoint/fingerprint: the per-round
-        # fixed costs (eager checkpoint + driver agg = 2 actions) dominate
-        # the per-step shuffles until the graph is huge, and a step past
-        # convergence is a no-op, so halving the rounds is semantics-free
-        jumped = step(step(labels)).localCheckpoint(eager=True)
-        # convergence fingerprint: sum of label hashes — type-agnostic
-        # (works for string ids too; a decimal cast would NULL them and
-        # stop after one round) and carried across rounds so each round
-        # pays ONE driver aggregation, not two
-        new_fp = jumped.agg(F.sum(F.xxhash64("lbl").cast("decimal(38,0)"))).collect()[0][0]
-        labels = jumped
-        if new_fp == prev_fp:
+        # TWO propagation steps per checkpoint: the per-round fixed cost
+        # (the eager checkpoint job) dominates the per-step shuffles until
+        # the graph is huge.  The second step's change flag rides that
+        # same job as an observed max — a fresh Observation per round,
+        # since one fulfils only on its first action
+        obs = Observation()
+        labels = (
+            step(step(labels))
+            .observe(obs, F.max("chg").alias("chg"))
+            .select("v", "lbl")
+            .localCheckpoint(eager=True)
+        )
+        # NULL on an empty active set (no edges): nothing left to change
+        if not obs.get["chg"]:
             break
-        prev_fp = new_fp
     else:
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter}:"

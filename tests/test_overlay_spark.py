@@ -204,6 +204,36 @@ def test_connected_components_raises_when_unconverged(spark):
         connected_components(edges, verts, id_col="id", max_iter=1)
 
 
+def test_connected_components_settling_round_is_last(spark):
+    """Disjoint pairs settle in round 1 (its second step lowers no
+    label), so ``max_iter=1`` suffices: no extra round just to confirm."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 20, 2)], "src long, dst long"
+    )
+    verts = spark.range(20)
+    comp = connected_components(edges, verts, id_col="id", max_iter=1)
+    got = {r["id"]: r["component"] for r in comp.collect()}
+    assert got == {i: i - i % 2 for i in range(20)}
+
+
+def test_connected_components_evaluates_edges_once(spark):
+    """The edge frame (in real use a pair join + Python refine) is
+    evaluated exactly once, not once per edge direction."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(it):
+        for pdf in it:
+            seen.add(len(pdf))
+            yield pdf
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 20, 2)], "src long, dst long"
+    ).mapInPandas(count_rows, schema="src long, dst long")
+    verts = spark.range(20)
+    connected_components(edges, verts, id_col="id").collect()
+    assert seen.value == 10
+
+
 def test_cluster_points_within_distance_vs_union_find(spark):
     rng = np.random.RandomState(5)
     n = 120

@@ -204,13 +204,12 @@ def test_connected_components_no_edges(spark):
 
 
 def test_connected_components_foreign_edge_ids(spark):
-    """Edges mentioning ids absent from the vertices frame: output rows
-    stay ⊆ vertices (the active set is intersected with vertices), and
-    labels may still propagate through the foreign endpoint's edges."""
+    """Edges mentioning ids absent from the vertices frame: components
+    are those of the subgraph induced on the vertices, so output rows
+    stay ⊆ vertices and no label propagates through the foreign id."""
     from ssb_sgis_spark.operators.clusters import connected_components
 
     edges = spark.createDataFrame([(1, 99), (99, 2)], "src long, dst long")
     verts = spark.createDataFrame([(1,), (2,), (3,)], "id long")
     rows = connected_components(edges, verts).collect()
-    ids = {r["id"] for r in rows}
-    assert ids == {1, 2, 3}
+    assert {r["id"]: r["component"] for r in rows} == {1: 1, 2: 2, 3: 3}
