@@ -8,7 +8,9 @@ driver-side graph nor a global STRtree exists, so:
 * candidate pair edges come from the bbox-cell cover self-join
   (:func:`polygon_pair_edges`) refined by the exact
   :func:`~ssb_sgis_spark.kernels.boolean.parts_intersect` predicate in an
-  Arrow batch, and
+  Arrow batch; without a given ``res`` the bounds are decoded once into a
+  ``localCheckpoint`` that both join sides read, and the same job
+  observes the median bbox span that picks ``res``, and
 * components are computed by **iterative hash-min label propagation with
   pointer jumping** (label-of-label join each round → O(log diameter)
   rounds), each round ``localCheckpoint``-ed to cut lineage — the
@@ -37,8 +39,8 @@ from ..kernels.boolean import parts_intersect
 from .geomtable import (
     bbox_cells_exploded,
     bbox_overlap_filter,
-    pick_pair_resolution,
     reference_cell_filter,
+    side_profile,
     with_bounds,
 )
 
@@ -55,7 +57,8 @@ def polygon_pair_edges(
     STRtree self-query, ``polygon_operations.py:100-110``)."""
     b = with_bounds(df.select(id_col, geometry_col), geometry_col)
     if res is None:
-        res = pick_pair_resolution(b)
+        # both self-join sides read the one checkpointed decode
+        b, _, res = side_profile(b)
     left = bbox_cells_exploded(b, res)
     right = b.select(
         F.col(id_col).alias("_dst"),

@@ -11,14 +11,18 @@ decode pass materializes (minx, miny, maxx, maxy) as native columns, the
 candidate cells of each geometry are produced by *pure column arithmetic*
 (`sequence` × 2 + `explode` + Morton interleave) — the big side of an
 overlay never ships WKB through Python again, and Catalyst keeps the
-whole pipeline in codegen until the final refine kernel.
+whole pipeline in codegen until the final refine kernel.  The side that
+sets a candidate join's plan is decoded once too: :func:`side_profile`
+pins it with one ``localCheckpoint`` whose job also observes the row count
+and median bbox span that pick the broadcast and the cell resolution, and
+the join reads that checkpoint.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -178,24 +182,40 @@ def bbox_cells_exploded(
     )
 
 
-def pick_pair_resolution(df_bounds: DataFrame, sample: int = 2048) -> int:
-    """Resolution where the median bbox spans ~2 cells per axis: bounds the
-    per-geometry cover fan-out (≤ ~9 cells) while keeping cells selective.
-    Driver-side sample — one tiny job."""
-    rows = (
-        df_bounds.select(
-            (F.col("maxx") - F.col("minx")).alias("w"),
-            (F.col("maxy") - F.col("miny")).alias("h"),
-        )
-        .limit(sample)
-        .collect()
-    )
-    if not rows:
-        return 10
-    spans = [max(r["w"] or 0.0, r["h"] or 0.0) for r in rows]
-    med = float(np.median(spans)) or 1.0
+def side_profile(
+    df: DataFrame,
+    minx: str = "minx",
+    miny: str = "miny",
+    maxx: str = "maxx",
+    maxy: str = "maxy",
+) -> tuple[DataFrame, int, int]:
+    """Materialize one side of a candidate join and read its plan
+    settings from that same job: ``(pinned, n_rows, res)``.
+
+    ``pinned`` is ``df`` after ``localCheckpoint(eager=True)``, so the
+    join reads the side's decoded rows instead of re-running its Python
+    decode.  An ``Observation`` on the checkpoint job counts the rows and
+    takes the approximate median bbox span (``count`` can only over-count
+    under a stage retry).  ``res`` is where that median spans ~2 cells
+    per axis: it bounds the per-geometry cover fan-out (≤ ~9 cells) while
+    keeping cells selective.  Candidate pairs are exact at every ``res``,
+    so an approximate median only moves cost, never a pair.  An empty
+    side gets ``res`` 10."""
+    # a fresh Observation per call: one fulfils only on its first action
+    obs = Observation()
+    span = F.greatest(F.col(maxx) - F.col(minx), F.col(maxy) - F.col(miny))
+    pinned = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.percentile_approx(span, 0.5).alias("med"),
+    ).localCheckpoint(eager=True)
+    stats = obs.get
+    n_rows = int(stats["n"] or 0)
+    if not n_rows:
+        return pinned, 0, 10
+    med = float(stats["med"] or 0.0) or 1.0
     res = int(np.floor(np.log2(DOMAIN_SIZE / max(med, 1e-9))))
-    return int(np.clip(res, 2, MAX_RES))
+    return pinned, n_rows, int(np.clip(res, 2, MAX_RES))
 
 
 def reference_cell_filter(res: int) -> Column:

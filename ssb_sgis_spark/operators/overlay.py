@@ -37,8 +37,8 @@ from ..kernels.boolean import overlay_parts
 from .geomtable import (
     bbox_cells_exploded,
     bbox_overlap_filter,
-    pick_pair_resolution,
     reference_cell_filter,
+    side_profile,
     with_bounds,
 )
 
@@ -86,10 +86,14 @@ def candidate_pairs(
     Returns (pairs, res).  Pairs are exact on bbox overlap; geometry
     refinement belongs to the caller's kernel.
 
-    ``broadcast_right=None`` probes the right side's row count (bounded
-    scan) and broadcasts it when small — mapInPandas lineage hides size
-    stats from AQE, so Catalyst would otherwise pick a shuffle join for a
-    361-row grid table (measured 4x slower at sf0.1).
+    When ``res`` or ``broadcast_right`` is None, the right side is
+    decoded once and pinned by ``localCheckpoint``; that one job also
+    observes its row count and median bbox span
+    (:func:`~.geomtable.side_profile`), the join reads the checkpoint,
+    and a right side of at most ``BROADCAST_RIGHT_MAX`` rows is broadcast
+    — mapInPandas lineage hides size stats from AQE, so Catalyst would
+    otherwise pick a shuffle join for a 361-row grid table (measured 4x
+    slower at sf0.1).  When the caller passes both, nothing runs eagerly.
     """
     l = with_bounds(df1, geometry_col)
     r = with_bounds(df2, geometry_col)
@@ -97,14 +101,14 @@ def candidate_pairs(
         *[F.col(c).alias(c + "__r") for c in df2.columns if c not in _BOUNDS],
         *[F.col(b).alias(b + "_2") for b in _BOUNDS],
     )
-    if res is None:
-        res = pick_pair_resolution(r.selectExpr(
-            "minx_2 as minx", "miny_2 as miny", "maxx_2 as maxx", "maxy_2 as maxy"
-        ))
-    if broadcast_right is None:
-        broadcast_right = (
-            df2.limit(BROADCAST_RIGHT_MAX + 1).count() <= BROADCAST_RIGHT_MAX
+    if res is None or broadcast_right is None:
+        r, n_right, side_res = side_profile(
+            r, minx="minx_2", miny="miny_2", maxx="maxx_2", maxy="maxy_2"
         )
+        if res is None:
+            res = side_res
+        if broadcast_right is None:
+            broadcast_right = n_right <= BROADCAST_RIGHT_MAX
     # spread the left side BEFORE the explode+join: AQE coalesces small
     # upstream shuffles (e.g. a distinct) to 1-2 partitions, which would
     # run the explode, the join AND the downstream geometry kernel

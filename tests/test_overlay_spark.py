@@ -12,10 +12,12 @@ from ssb_sgis_spark.operators.dissolve import (
     dissexp,
     dissexp_by_cluster,
 )
-from ssb_sgis_spark.operators.overlay import clean_overlay
+from ssb_sgis_spark.operators import overlay
+from ssb_sgis_spark.operators.overlay import candidate_pairs, clean_overlay
 from ssb_sgis_spark.operators.clusters import (
     cluster_points_within_distance,
     connected_components,
+    polygon_pair_edges,
 )
 
 
@@ -232,6 +234,84 @@ def test_connected_components_evaluates_edges_once(spark):
     verts = spark.range(20)
     connected_components(edges, verts, id_col="id").collect()
     assert seen.value == 10
+
+
+def _jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran), read from a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("jobs-during", "")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup("jobs-during"))
+
+
+def _pair_ids(pairs):
+    return {(r["aid"], r["bid__r"]) for r in pairs.select("aid", "bid__r").collect()}
+
+
+def test_candidate_pairs_plans_with_one_job_and_one_right_decode(spark, frames):
+    """Choosing the resolution and the broadcast runs one Spark job, and
+    the right side's Python runs once in all: the join reads that job's
+    checkpoint instead of re-running it."""
+    _, B, dfa, dfb = frames
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(it):
+        for pdf in it:
+            seen.add(len(pdf))
+            yield pdf
+
+    right = dfb.mapInPandas(count_rows, schema=dfb.schema)
+    (pairs, _), jobs = _jobs_during(spark, lambda: candidate_pairs(dfa, right))
+    assert len(jobs) == 1
+    pairs.count()
+    assert seen.value == len(B)
+
+
+def test_candidate_pairs_broadcast_decision_at_the_cap(spark, frames, monkeypatch):
+    """A right side of n rows is broadcast when the cap is n, shuffled
+    when it is n - 1, and the pairs are the same either way."""
+    _, B, dfa, dfb = frames
+    found = {}
+    for cap in (len(B), len(B) - 1):
+        monkeypatch.setattr(overlay, "BROADCAST_RIGHT_MAX", cap)
+        pairs, _ = candidate_pairs(dfa, dfb)
+        plan = pairs._sc._jvm.PythonSQLUtils.explainString(
+            pairs._jdf.queryExecution(), "formatted"
+        )
+        found[cap] = ("BroadcastHashJoin" in plan, _pair_ids(pairs))
+    assert found[len(B)][0]
+    assert not found[len(B) - 1][0]
+    assert found[len(B)][1] == found[len(B) - 1][1]
+
+
+def test_pairs_do_not_depend_on_resolution(spark, frames):
+    """Pairs are exact at every cell resolution (bbox overlap plus the
+    reference-cell dedup), which is what lets the profiled resolution
+    come from an approximate median."""
+    A, B, dfa, dfb = frames
+
+    def overlaps(a, b):
+        return a[0] <= b[2] and a[2] >= b[0] and a[1] <= b[3] and a[3] >= b[1]
+
+    exp_pairs = {
+        (i, j) for i, a in enumerate(A) for j, b in enumerate(B) if overlaps(a, b)
+    }
+    exp_edges = {
+        (i, j) for i, a in enumerate(A) for j, b in enumerate(A)
+        if i < j and overlaps(a, b)
+    }
+    assert exp_pairs and exp_edges
+    for res in (None, 6, 16):
+        pairs, used = candidate_pairs(dfa, dfb, res=res)
+        assert res is None or used == res
+        assert _pair_ids(pairs) == exp_pairs
+        edges = polygon_pair_edges(dfa, "aid", res=res).collect()
+        assert {(r["src"], r["dst"]) for r in edges} == exp_edges
 
 
 def test_cluster_points_within_distance_vs_union_find(spark):
