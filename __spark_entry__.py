@@ -1255,10 +1255,10 @@ def q_tiled_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics").  Municipality ids are the tile assignment; each batch
     bbox-prunes the pages side to its own tiles' extents (native
     predicates -> parquet scan pruning), runs the cover PIP join for just
-    those tiles, and appends a lineage manifest row (n_rows, checksum,
-    elapsed) with its partitioned output; a re-run against the same
-    out_dir skips finished batches.  Same oracle as pip_join — tiling is
-    an execution strategy, not a semantics change."""
+    those tiles, and commits its output as one snapshot of out_dir stamped
+    with its lineage (batch, n_rows, checksum, elapsed); a re-run against
+    the same out_dir skips committed batches.  Same oracle as pip_join —
+    tiling is an execution strategy, not a semantics change."""
     import hashlib
     import os
     import shutil

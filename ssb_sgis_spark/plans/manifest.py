@@ -5,14 +5,15 @@ NetworkAnalysis run log, ``networkanalysis.py:1259-1330`` — method name,
 elapsed minutes, percent_missing, cost stats; our metric schema is
 modeled on it):
 
-* **tile assignment manifest** — a little parquet table
-  ``(batch_id, status, n_rows, elapsed_s, checksum, finished_ts)`` next
-  to the job output.  A job processes tile *batches*; each finished batch
-  appends its output partition AND its manifest row.  On restart,
-  :class:`TiledRun` skips every batch already marked done — resume is
-  idempotent because output is written ``partitionBy(batch_id)`` and a
-  re-run of an unfinished batch overwrites only its own partition
-  (dynamic partition overwrite).
+* **tile batches committed as snapshots** — the output directory of a
+  :class:`TiledRun` is a snapshot table (``sources/snapshots.py``).  A
+  job processes tile *batches*; each ``rec.write`` stages an invisible
+  data directory, and a batch that exits cleanly commits ONE append
+  snapshot listing them, stamped ``{"tiled_batch", "n_rows",
+  "checksum", "elapsed_s"}``.  On restart, :class:`TiledRun` skips
+  every batch a snapshot names — a JSON listing, no Spark job.  A batch
+  that crashed before its commit left only orphan directories no
+  reader sees, so a resume simply runs it again.
 * **per-partition lineage rows** — :func:`partition_metrics` aggregates
   any DataFrame by ``spark_partition_id()`` into
   ``(partition_id, n_rows, key_min, key_max, value_checksum)`` so every
@@ -21,11 +22,17 @@ modeled on it):
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.snapshots import (
+    commit_snapshot,
+    read_snapshot_table,
+    snapshots,
+    stage_snapshot_dir,
+)
 
 
 def partition_metrics(df: DataFrame, key_col: str | None = None) -> DataFrame:
@@ -47,49 +54,24 @@ class TiledRun:
     """Resumable batched execution over a partition-key column.
 
     >>> run = TiledRun(spark, out_dir, batch_col="tile")
-    >>> for batch_id, is_done in run.batches(all_tile_ids, n_batches=8):
-    ...     if is_done: continue     # resume skips finished work
-    ...     with run.record(batch_id) as rec:
-    ...         out = job(tiles_in_batch)          # any DataFrame
-    ...         rec.write(out)                     # partitioned append
+    >>> for batch, tiles, done in run.batches(all_tile_ids, n_batches=8):
+    ...     if done: continue            # resume skips committed batches
+    ...     with run.record(batch) as rec:
+    ...         out = job(tiles)                   # any DataFrame
+    ...         rec.write(out)                     # staged, committed on exit
+
+    ``out_dir`` is a snapshot table owned by this one writer; snapshot
+    ``k`` holds the first ``k`` committed batches.  A batch that wrote
+    nothing commits nothing, so a resume runs it again.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str, batch_col: str = "_batch"):
         self.spark = spark
         self.out_dir = out_dir
         self.batch_col = batch_col
-        self.manifest_path = os.path.join(out_dir, "_manifest")
-        self.data_path = os.path.join(out_dir, "data")
 
-    # ------------------------------------------------------------- manifest
     def done_batches(self) -> set[int]:
-        try:
-            rows = (
-                self.spark.read.parquet(self.manifest_path)
-                .filter(F.col("status") == "done")
-                .select("batch_id")
-                .collect()
-            )
-            return {r["batch_id"] for r in rows}
-        except Exception:
-            return set()
-
-    def _append_manifest(self, row: dict) -> None:
-        pdf = self.spark.createDataFrame(
-            [
-                (
-                    int(row["batch_id"]),
-                    row["status"],
-                    int(row["n_rows"]),
-                    float(row["elapsed_s"]),
-                    int(row["checksum"]),
-                    float(row["finished_ts"]),
-                )
-            ],
-            "batch_id long, status string, n_rows long, elapsed_s double, "
-            "checksum long, finished_ts double",
-        )
-        pdf.write.mode("append").parquet(self.manifest_path)
+        return {m["tiled_batch"] for m in snapshots(self.out_dir) if "tiled_batch" in m}
 
     # -------------------------------------------------------------- batches
     @staticmethod
@@ -114,26 +96,23 @@ class TiledRun:
             self.n_rows = 0
             self.checksum = 0
             self.t0 = time.time()
+            self.dirs: list[str] = []
+            self.schema = None
 
         def write(self, df: DataFrame) -> None:
             cols = df.columns
             out = df.withColumn(self.run.batch_col, F.lit(self.batch_id))
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(self.run.batch_col)
-                .parquet(self.run.data_path)
-            )
-            # lineage metrics audit the COMMITTED files, not the plan:
+            data_dir = stage_snapshot_dir(out, self.run.out_dir)
+            self.dirs.append(data_dir)
+            self.schema = out.schema
+            # lineage metrics audit the files that LANDED, not the plan:
             # accumulator-style metrics riding the write (Observation)
             # double-count under stage retry/speculation, and a separate
             # agg over `df` would re-execute the whole job AND could
-            # diverge from what actually landed on disk.  Partition
-            # pruning on batch_col keeps this a scan of just this
-            # batch's output.
+            # diverge from what actually landed on disk.
             stats = (
-                self.run.spark.read.parquet(self.run.data_path)
-                .filter(F.col(self.run.batch_col) == self.batch_id)
+                self.run.spark.read.schema(out.schema)
+                .parquet(data_dir)
                 .agg(
                     F.count(F.lit(1)).alias("n"),
                     F.coalesce(
@@ -149,16 +128,17 @@ class TiledRun:
             return self
 
         def __exit__(self, exc_type, exc, tb):
-            if exc_type is None:
-                self.run._append_manifest(
-                    {
-                        "batch_id": self.batch_id,
-                        "status": "done",
+            if exc_type is None and self.dirs:
+                commit_snapshot(
+                    self.run.out_dir,
+                    self.dirs,
+                    self.schema,
+                    extra_manifest={
+                        "tiled_batch": self.batch_id,
                         "n_rows": self.n_rows,
-                        "elapsed_s": time.time() - self.t0,
                         "checksum": self.checksum,
-                        "finished_ts": time.time(),
-                    }
+                        "elapsed_s": time.time() - self.t0,
+                    },
                 )
             return False
 
@@ -167,4 +147,4 @@ class TiledRun:
 
     # ---------------------------------------------------------------- reads
     def result(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_path)
+        return read_snapshot_table(self.spark, self.out_dir)

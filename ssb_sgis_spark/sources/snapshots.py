@@ -5,8 +5,8 @@ runtime (no jars in this sandbox).  This module closes that gap with
 Iceberg's CORE mechanism re-implemented on the filesystem primitives
 Spark already has:
 
-* every commit writes its data files into a fresh directory
-  ``<table>/data/s<N>/`` (no file is ever mutated or deleted — the
+* every commit writes its data files into fresh directories
+  ``<table>/data/s<N>-<uuid8>/`` (no file is ever mutated or deleted — the
   append-only lake invariant that makes time travel possible at all);
 * a commit becomes visible by writing ``<table>/_snapshots/v<N>.json``
   listing the data directories visible at that snapshot (parent dirs +
@@ -17,6 +17,11 @@ Spark already has:
 * reading at ``snapshot_id=N`` (or ``as_of_timestamp_ms``) is a plain
   ``spark.read.parquet(*dirs)`` over the manifest's directory list —
   fully executor-parallel, no driver data movement.
+
+:func:`commit_snapshot` writes every manifest.  Its three users stage
+data with :func:`stage_snapshot_dir` first: :func:`write_snapshot_table`,
+:func:`merge_snapshot_table` and ``plans.manifest.TiledRun`` (one append
+per tile batch, stamped with the batch id its resume pass reads back).
 
 Reference parity: the reference reads/writes GCS parquet via dapla
 (``io/dapla_functions.py:15-119``) with no snapshot story; the north
@@ -36,6 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _SNAPDIR = "_snapshots"
 
@@ -44,17 +50,28 @@ def _manifest_dir(path: str) -> str:
     return os.path.join(path, _SNAPDIR)
 
 
+def _manifest_files(path: str) -> list[str]:
+    """Committed manifests, oldest first: ``v<N>.json`` names are
+    zero-padded, so (length, name) order is id order."""
+    d = _manifest_dir(path)
+    names = sorted(os.listdir(d), key=lambda n: (len(n), n)) if os.path.isdir(d) else []
+    return [os.path.join(d, n) for n in names if n.startswith("v") and n.endswith(".json")]
+
+
+def _load(fp: str) -> dict:
+    with open(fp) as f:
+        return json.load(f)
+
+
 def snapshots(path: str) -> list[dict]:
     """All committed snapshots, oldest first."""
-    d = _manifest_dir(path)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in sorted(os.listdir(d)):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(d, name)) as f:
-                out.append(json.load(f))
-    return sorted(out, key=lambda m: m["snapshot_id"])
+    return [_load(fp) for fp in _manifest_files(path)]
+
+
+def _head(path: str) -> dict | None:
+    """The newest committed snapshot, reading only its manifest."""
+    files = _manifest_files(path)
+    return _load(files[-1]) if files else None
 
 
 def _resolve(
@@ -107,58 +124,92 @@ def write_snapshot_table(
     ``replace`` may set a new layout (a new table generation)."""
     if mode not in ("append", "overwrite", "replace"):
         raise ValueError(f"mode must be append|overwrite|replace, got {mode!r}")
-    prev = snapshots(path)
-    if prev:
-        head = prev[-1]
-        if mode == "append":
-            head_pby = head.get("partition_by") or []
-            if partition_by is None:
-                partition_by = head_pby
-            elif list(partition_by) != head_pby:
-                raise ValueError(
-                    f"append partition layout mismatch: table is partitioned "
-                    f"by {head_pby}, append requested {list(partition_by)}"
-                )
-        schema_cols = {f["name"] for f in head["schema"]["fields"]}
-        new_cols = {f.name for f in df.schema.fields}
-        if mode == "append" and schema_cols != new_cols:
-            if allow_evolution and new_cols > schema_cols:
-                # additive evolution: the append carries every existing
-                # column plus new ones; the committed manifest schema
-                # becomes the union, and the explicit-schema read path
-                # null-fills the new columns in pre-evolution files
-                # (Iceberg add-column semantics; drops stay refused)
-                pass
-            else:
-                hint = (
-                    " (pass allow_evolution=True for additive columns)"
-                    if new_cols > schema_cols
-                    else ""
-                )
-                raise ValueError(
-                    f"append schema mismatch: table has {sorted(schema_cols)}, "
-                    f"dataframe has {sorted(new_cols)}{hint}"
-                )
-        sid = head["snapshot_id"] + 1
-        parent = head["snapshot_id"]
-    else:
-        sid, parent = 1, None
+    # checked before staging so a refused append writes nothing; the
+    # commit checks again against the head it commits on
+    partition_by = _check_commit(_head(path), df.schema, mode, partition_by, allow_evolution)
+    data_dir = stage_snapshot_dir(df, path, partition_by)
+    return commit_snapshot(
+        path, [data_dir], df.schema, operation=mode, partition_by=partition_by,
+        extra_manifest=extra_manifest, allow_evolution=allow_evolution,
+    )
+
+
+def _check_commit(
+    head: dict | None, schema: T.StructType, operation: str,
+    partition_by: list[str] | None, allow_evolution: bool,
+) -> list[str]:
+    """Refuse an append whose partition layout or columns differ from the
+    head's; returns the commit's partition layout (an append inherits the
+    head's when ``partition_by`` is None)."""
+    if head is None or operation != "append":
+        return list(partition_by or [])
+    head_pby = head.get("partition_by") or []
+    if partition_by is None:
+        partition_by = head_pby
+    elif list(partition_by) != head_pby:
+        raise ValueError(
+            f"append partition layout mismatch: table is partitioned "
+            f"by {head_pby}, append requested {list(partition_by)}"
+        )
+    schema_cols = {f["name"] for f in head["schema"]["fields"]}
+    new_cols = {f.name for f in schema.fields}
+    # additive evolution (Iceberg add-column; drops stay refused): the
+    # manifest schema becomes the union, and the explicit-schema read
+    # null-fills the new columns in pre-evolution files
+    if schema_cols != new_cols and not (allow_evolution and new_cols > schema_cols):
+        hint = (
+            " (pass allow_evolution=True for additive columns)"
+            if new_cols > schema_cols
+            else ""
+        )
+        raise ValueError(
+            f"append schema mismatch: table has {sorted(schema_cols)}, "
+            f"dataframe has {sorted(new_cols)}{hint}"
+        )
+    return list(partition_by)
+
+
+def stage_snapshot_dir(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> str:
+    """Write ``df`` into a fresh ``<path>/data/s<N>-<uuid8>`` directory
+    (``N``: the next snapshot id) and return it.  Spark's
+    ``errorifexists`` mode applies.  No reader sees the directory until
+    a committed manifest lists it; a writer that crashes before
+    :func:`commit_snapshot` leaves it as an invisible orphan."""
+    head = _head(path)
+    sid = head["snapshot_id"] + 1 if head else 1
     data_dir = os.path.join(path, "data", f"s{sid}-{uuid.uuid4().hex[:8]}")
     writer = df.write.mode("errorifexists")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_dir)
-    dirs = [data_dir] if (mode in ("overwrite", "replace") or not prev) else (
-        prev[-1]["data_dirs"] + [data_dir]
-    )
+    return data_dir
+
+
+def commit_snapshot(
+    path: str, new_dirs: list[str], schema: T.StructType, *,
+    operation: str = "append", partition_by: list[str] | None = None,
+    extra_manifest: dict | None = None, allow_evolution: bool = False,
+) -> int:
+    """Make staged data paths visible as ONE new snapshot; returns its id.
+
+    ``append`` lists ``new_dirs`` after the head's data paths, once the
+    append passed the head's layout and schema checks; every other
+    operation makes exactly ``new_dirs`` visible.  Writing
+    ``_snapshots/v<N>.json`` is the atomic commit point (tmp file +
+    ``os.replace``): readers see the whole snapshot or none of it."""
+    head = _head(path)
+    partition_by = _check_commit(head, schema, operation, partition_by, allow_evolution)
+    sid = head["snapshot_id"] + 1 if head else 1
     manifest = {
         "snapshot_id": sid,
-        "parent_id": parent,
+        "parent_id": head["snapshot_id"] if head else None,
         "timestamp_ms": int(time.time() * 1000),
-        "operation": mode,
-        "data_dirs": dirs,
-        "partition_by": list(partition_by or []),
-        "schema": json.loads(df.schema.json()),
+        "operation": operation,
+        "data_dirs": (head["data_dirs"] if head and operation == "append" else []) + new_dirs,
+        "partition_by": partition_by,
+        "schema": json.loads(schema.json()),
         **(extra_manifest or {}),
     }
     mdir = _manifest_dir(path)
@@ -205,17 +256,17 @@ def read_snapshot_table(
             rng = _file_key_range(fp, col)
             if rng is None or not (rng[1] < lo or rng[0] > hi):
                 keep.append(fp)
-        return _read_manifest_paths(spark, path, m, keep).filter(
+        return _read_snapshot_paths(spark, path, m, keep).filter(
             (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         )
     # the MANIFEST schema drives the scan (Iceberg semantics): after
     # additive evolution, files written before a column existed are
     # null-filled for it instead of the read failing or depending on
     # which file Spark sampled for inference
-    return _read_manifest_paths(spark, path, m, m["data_dirs"])
+    return _read_snapshot_paths(spark, path, m, m["data_dirs"])
 
 
-def _read_manifest_paths(spark: SparkSession, path: str, m: dict, paths: list[str]):
+def _read_snapshot_paths(spark: SparkSession, path: str, m: dict, paths: list[str]):
     """Read data paths (dirs or files) under a snapshot manifest with the
     MANIFEST schema.  Unpartitioned tables read in one scan under the
     shared ``<table>/data`` basePath.  For a hive-partitioned table the
@@ -224,8 +275,6 @@ def _read_manifest_paths(spark: SparkSession, path: str, m: dict, paths: list[st
     partition discovery — so each snapshot directory becomes its own
     ``basePath`` and the scans union by name (what Iceberg planning does
     per manifest)."""
-    from pyspark.sql import types as T
-
     schema = T.StructType.fromJson(m["schema"])
     if not paths:
         return spark.createDataFrame([], schema)
@@ -617,13 +666,11 @@ def merge_snapshot_table(
     touched = [fp for i, fp in enumerate(files) if i in touched_idx]
     untouched = [fp for i, fp in enumerate(files) if i not in touched_idx]
 
-    sid = m["snapshot_id"] + 1
-    data_dir = os.path.join(path, "data", f"s{sid}-{uuid.uuid4().hex[:8]}")
     if touched:
         # re-read EXACTLY like read_snapshot_table: the manifest schema
         # (so post-evolution columns null-fill in pre-evolution files)
         # + per-snapshot basePath (so hive partition columns resolve)
-        current = _read_manifest_paths(spark, path, m, touched).select(*cols)
+        current = _read_snapshot_paths(spark, path, m, touched).select(*cols)
         survivors = current.join(probe_d, on=key_col, how="left_anti")
         merged = (
             survivors.unionByName(updates) if updates is not None else survivors
@@ -634,30 +681,19 @@ def merge_snapshot_table(
             if updates is not None
             else spark.createDataFrame([], read_snapshot_table(spark, path).schema)
         )
-    writer = merged.write.mode("errorifexists")
-    if pby:
-        writer = writer.partitionBy(*pby)
-    writer.parquet(data_dir)
-
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": m["snapshot_id"],
-        "timestamp_ms": int(time.time() * 1000),
-        "operation": "merge",
-        "data_dirs": untouched + [data_dir],
-        "partition_by": pby,
-        "rewritten_files": len(touched),
-        "carried_files": len(untouched),
-        "schema": m["schema"],
-        **(extra_manifest or {}),
-    }
-    mdir = _manifest_dir(path)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{sid}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(mdir, f"v{sid:08d}.json"))  # commit point
-    return sid
+    data_dir = stage_snapshot_dir(merged, path, pby)
+    return commit_snapshot(
+        path,
+        untouched + [data_dir],
+        T.StructType.fromJson(m["schema"]),
+        operation="merge",
+        partition_by=pby,
+        extra_manifest={
+            "rewritten_files": len(touched),
+            "carried_files": len(untouched),
+            **(extra_manifest or {}),
+        },
+    )
 
 
 def file_column_ranges(
@@ -670,43 +706,17 @@ def file_column_ranges(
     snapshot — the pruning evidence OPTIMIZE exists to improve: a scan
     with a predicate on ``column`` can skip every file whose [min, max]
     misses the range.  Driver-side metadata walk (footer stats only, no
-    data IO) — the same information an Iceberg manifest carries."""
+    data IO) — the same information an Iceberg manifest carries.  Files
+    a ``merge`` snapshot carries by path are listed too; a file whose
+    footer lacks stats for ``column`` is not."""
     import pyarrow.parquet as pq
 
-    m = _resolve(path, snapshot_id)
     out = []
-    for d in m["data_dirs"]:
-        for root, _, files in os.walk(d):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                fp = os.path.join(root, fn)
-                meta = pq.ParquetFile(fp).metadata
-                idx = next(
-                    (
-                        j
-                        for j in range(meta.num_columns)
-                        if meta.row_group(0).column(j).path_in_schema == column
-                    ),
-                    None,
-                ) if meta.num_row_groups else None
-                if idx is None:
-                    continue
-                mins, maxs = [], []
-                for rg in range(meta.num_row_groups):
-                    st = meta.row_group(rg).column(idx).statistics
-                    if st is not None and st.has_min_max:
-                        mins.append(st.min)
-                        maxs.append(st.max)
-                if mins:
-                    out.append(
-                        {
-                            "file": fp,
-                            "min": min(mins),
-                            "max": max(maxs),
-                            "rows": meta.num_rows,
-                        }
-                    )
+    for fp in _snapshot_files(_resolve(path, snapshot_id)):
+        rng = _file_key_range(fp, column)
+        if rng is not None:
+            rows = pq.read_metadata(fp).num_rows
+            out.append({"file": fp, "min": rng[0], "max": rng[1], "rows": rows})
     return out
 
 

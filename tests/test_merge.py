@@ -205,3 +205,14 @@ def test_merge_after_schema_evolution(spark, tmp_path):
     rows = {r.id: (r.v, r.w) for r in read_snapshot_table(spark, t).collect()}
     assert len(rows) == 20
     assert rows[0] == (0, 9) and rows[5] == (50, None) and rows[15] == (150, 5)
+
+
+def test_file_column_ranges_lists_carried_files(spark, tmp_path):
+    """After a merge, the footer ranges cover the files the head carries
+    by path as well as the rewritten directory."""
+    t = str(tmp_path / "tbl")
+    write_snapshot_table(_mk(spark, 0, 1000).repartitionByRange(4, "id"), t)
+    merge_snapshot_table(spark, t, _mk(spark, 7, 8, mult=999), "id")
+    files = {r["file"] for r in snap.file_column_ranges(t, "id")}
+    assert files == set(snap._snapshot_files(snapshots(t)[-1]))
+    assert sum(r["rows"] for r in snap.file_column_ranges(t, "id")) == 1000

@@ -1,5 +1,5 @@
 """gridloop tiled≡global invariant, salted dissolve equivalence, and
-checkpoint-resume via the tile manifest."""
+checkpoint-resume of tile batches committed as snapshots."""
 
 import numpy as np
 import pytest
@@ -11,6 +11,11 @@ from ssb_sgis_spark.kernels.boolean import polygon_area
 from ssb_sgis_spark.operators.dissolve import dissexp, dissolve
 from ssb_sgis_spark.operators.gridloop import gridloop
 from ssb_sgis_spark.plans.manifest import TiledRun, partition_metrics
+from ssb_sgis_spark.sources.snapshots import (
+    expire_snapshots,
+    read_snapshot_table,
+    snapshots,
+)
 
 
 @pytest.fixture(scope="module")
@@ -136,10 +141,102 @@ def test_tiled_run_resume(spark, points, tmp_path):
         .collect()
     }
     assert got == exp
-    # manifest carries per-batch lineage
-    man = spark.read.parquet(run2.manifest_path).collect()
-    assert sum(r["n_rows"] for r in man) == 10  # one agg row per tile
-    assert all(r["status"] == "done" for r in man)
+    # each batch's snapshot carries its lineage
+    man = [m for m in snapshots(out1) if "tiled_batch" in m]
+    assert sum(m["n_rows"] for m in man) == 10  # one agg row per tile
+    assert sorted(m["tiled_batch"] for m in man) == [0, 1, 2, 3]
+
+
+def _jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran), read from a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("jobs-during", "")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup("jobs-during"))
+
+
+def _tile_job(df):
+    df = df.withColumn("tile", (F.col("uid") % 10).cast("long"))
+
+    def job(tiles):
+        return df.filter(F.col("tile").isin(tiles)).select("uid", "tile")
+
+    return job
+
+
+def test_tiled_run_two_writes_in_one_batch(spark, tmp_path):
+    """Every write of a batch is committed, and the batch's row count is
+    what reads back."""
+    run = TiledRun(spark, str(tmp_path / "run"))
+    with run.record(0) as rec:
+        rec.write(spark.range(0, 5))
+        rec.write(spark.range(5, 12))
+    got = run.result()
+    assert sorted(r["id"] for r in got.collect()) == list(range(12))
+    assert rec.n_rows == got.count() == 12
+    assert got.columns == ["id", "_batch"]
+    assert dict(got.dtypes)["_batch"] == "int"
+
+
+def test_tiled_run_crash_before_commit(spark, points, tmp_path):
+    """A batch that raises after writing leaves no visible rows and is
+    not done; a resume redoes only it, and the result equals one shot."""
+    _, _, df = points
+    job = _tile_job(df)
+    tiles = list(range(10))
+    out = str(tmp_path / "run")
+    run = TiledRun(spark, out)
+    with run.record(0) as rec:
+        rec.write(job([0, 2, 4, 6, 8]))
+    with pytest.raises(RuntimeError, match="crash"):
+        with run.record(1) as rec:
+            rec.write(job([1, 3, 5, 7, 9]))
+            raise RuntimeError("crash before commit")
+    assert run.result().count() == job([0, 2, 4, 6, 8]).count()
+    assert run.done_batches() == {0}
+
+    redone = []
+    run2 = TiledRun(spark, out)
+    for b, batch_tiles, done in run2.batches(tiles, n_batches=2):
+        if done:
+            continue
+        redone.append(b)
+        with run2.record(b) as rec:
+            rec.write(job(batch_tiles))
+    assert redone == [1]
+    got = sorted((r["uid"], r["tile"]) for r in run2.result().collect())
+    assert got == sorted((r["uid"], r["tile"]) for r in job(tiles).collect())
+
+
+def test_tiled_run_resume_runs_no_jobs_and_is_a_snapshot_table(spark, points, tmp_path):
+    """A resume pass over a finished run reads JSON only, and the output
+    is an ordinary snapshot table: one snapshot per batch, expirable."""
+    _, _, df = points
+    job = _tile_job(df)
+    tiles = list(range(10))
+    out = str(tmp_path / "run")
+    run = TiledRun(spark, out)
+    for b, batch_tiles, _ in run.batches(tiles, n_batches=2):
+        with run.record(b) as rec:
+            rec.write(job(batch_tiles))
+
+    pending, jobs = _jobs_during(
+        spark,
+        lambda: [b for b, _, done in TiledRun(spark, out).batches(tiles, 2) if not done],
+    )
+    assert pending == [] and jobs == []
+
+    first = read_snapshot_table(spark, out, snapshot_id=1)
+    assert {r["tile"] % 2 for r in first.collect()} == {0}
+    assert first.count() == job([0, 2, 4, 6, 8]).count()
+    expire_snapshots(out, keep_last=1)
+    assert [m["snapshot_id"] for m in snapshots(out)] == [2]
+    assert read_snapshot_table(spark, out).count() == df.count()
 
 
 def test_partition_metrics(spark, points):
