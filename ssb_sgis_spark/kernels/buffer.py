@@ -132,18 +132,3 @@ def _erode(
     if not band:
         return []
     return difference(parts, [union_all(band)])
-
-
-def buffer_point_np(
-    x: np.ndarray, y: np.ndarray, distance: float, quad_segs: int = DEFAULT_QUAD_SEGS
-):
-    """Vectorized point-buffer: (N,V,2) ring coordinates for N points —
-    the hot path (page points) never goes through the arrangement kernel."""
-    n = max(4 * int(quad_segs), 4)
-    th = np.linspace(0.0, 2.0 * np.pi, n, endpoint=False)
-    cx = np.cos(th) * distance
-    cy = np.sin(th) * distance
-    rx = x[:, None] + cx[None, :]
-    ry = y[:, None] + cy[None, :]
-    rings = np.stack([rx, ry], axis=2)
-    return np.concatenate([rings, rings[:, :1, :]], axis=1)

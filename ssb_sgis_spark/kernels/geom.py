@@ -271,15 +271,6 @@ def point_to_edges_dist2(
 
 
 # -------------------------------------------------------------- distances
-def planar_distance(x1, y1, x2, y2) -> np.ndarray:
-    """Euclidean distance — written as sqrt of products (not hypot) so the
-    SQL oracle expression ``sqrt((x1-x2)*(x1-x2)+(y1-y2)*(y1-y2))``
-    produces bit-identical doubles."""
-    dx = x1 - x2
-    dy = y1 - y2
-    return np.sqrt(dx * dx + dy * dy)
-
-
 def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     """Great-circle metres on the WGS84 mean sphere (R=6371008.8)."""
     rl1, rl2 = np.radians(lat1), np.radians(lat2)

@@ -252,7 +252,8 @@ def encode_boxes(
     x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray
 ) -> list[bytes]:
     """Vectorized WKB for axis-aligned rectangles — byte-identical to
-    ``encode_polygon([_box_ring(x0, y0, x1, y1)])`` per row, but built in
+    ``encode_polygon`` of the closed ring (x0,y0) → (x1,y0) → (x1,y1) →
+    (x0,y1) → (x0,y0) per row, but built in
     one numpy pass (a 93-byte fixed layout: header + 5-point ring).  Box
     results dominate tile/grid overlays, and per-row struct packing was
     the fast path's residual Python cost."""

@@ -5,8 +5,10 @@ polygon_operations.py:31-188``): STRtree self-join pairs → networkx
 ``connected_components`` → cluster label column.  At 10^12 rows neither a
 driver-side graph nor a global STRtree exists, so:
 
-* candidate pair edges come from the bbox-cell cover self-join
-  (:func:`polygon_pair_edges`) refined by the exact
+* candidate pair edges (:func:`polygon_pair_edges`) come from the
+  overlay's bbox-cell candidate join,
+  :func:`~ssb_sgis_spark.operators.overlay.candidate_pairs`, run as a
+  self-join and refined by the exact
   :func:`~ssb_sgis_spark.kernels.boolean.parts_intersect` predicate in an
   Arrow batch; without a given ``res`` the bounds are decoded once into a
   ``localCheckpoint`` that both join sides read, and the same job
@@ -33,16 +35,11 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cells import cell_index_col, cell_size, morton_from_ixy_col, DOMAIN_SIZE, MAX_RES
+from ..cells import cell_index_col, DOMAIN_SIZE, MAX_RES
 from ..kernels import wkb
 from ..kernels.boolean import parts_intersect
-from .geomtable import (
-    bbox_cells_exploded,
-    bbox_overlap_filter,
-    reference_cell_filter,
-    side_profile,
-    with_bounds,
-)
+from .geomtable import side_profile, with_bounds
+from .overlay import _detect_boxes, candidate_pairs
 
 
 # -------------------------------------------------------- pair generation
@@ -53,27 +50,18 @@ def polygon_pair_edges(
     res: int | None = None,
 ) -> DataFrame:
     """(src, dst) edges between intersecting polygons of one table —
-    self-join candidate pairs + exact predicate refine (the reference's
-    STRtree self-query, ``polygon_operations.py:100-110``)."""
+    :func:`~.overlay.candidate_pairs` as a self-join (src < dst) + exact
+    predicate refine (the reference's STRtree self-query,
+    ``polygon_operations.py:100-110``).  With ``res`` None, one eager
+    job pins the decoded bounds and picks ``res``; both join sides read
+    that pin."""
     b = with_bounds(df.select(id_col, geometry_col), geometry_col)
     if res is None:
         # both self-join sides read the one checkpointed decode
         b, _, res = side_profile(b)
-    left = bbox_cells_exploded(b, res)
-    right = b.select(
-        F.col(id_col).alias("_dst"),
-        F.col(geometry_col).alias("_geom2"),
-        *[F.col(c).alias(c + "_2") for c in ("minx", "miny", "maxx", "maxy")],
-    )
-    right = bbox_cells_exploded(
-        right, res, minx="minx_2", miny="miny_2", maxx="maxx_2", maxy="maxy_2"
-    )
-    pairs = (
-        left.join(right, "cell")
-        .filter(F.col(id_col) < F.col("_dst"))
-        .filter(bbox_overlap_filter())
-        .filter(reference_cell_filter(res))
-    )
+    id_r, geometry_r = id_col + "__r", geometry_col + "__r"
+    pairs, _ = candidate_pairs(b, b, geometry_col, res, broadcast_right=False)
+    pairs = pairs.filter(F.col(id_col) < F.col(id_r))
 
     out_schema = T.StructType(
         [
@@ -83,13 +71,11 @@ def polygon_pair_edges(
     )
 
     def refine(it):
-        from .overlay import _detect_boxes
-
         for pdf in it:
             if not len(pdf):
                 continue
             ga = wkb.decode(pdf[geometry_col].tolist())
-            gb = wkb.decode(pdf["_geom2"].tolist())
+            gb = wkb.decode(pdf[geometry_r].tolist())
             # box x box pairs that survived the bbox-overlap filter are
             # intersecting by definition — skip the per-pair kernel for
             # the dominant tile/grid shape (same fast path as overlay)
@@ -101,7 +87,7 @@ def polygon_pair_edges(
                 for i in np.flatnonzero(~both)
                 if parts_intersect(ga.geom_parts(i), gb.geom_parts(i))
             ]
-            o = pdf.iloc[sorted(keep)][[id_col, "_dst"]].copy()
+            o = pdf.iloc[sorted(keep)][[id_col, id_r]].copy()
             o.columns = ["src", "dst"]
             yield o
 

@@ -356,9 +356,6 @@ def knn_cellwise(
     right_id: str = "vid",
     right_x: str = "px",
     right_y: str = "py",
-    max_rings: int = 4,
-    brute_threshold: int = 100_000,
-    brute_work: int = 2_000_000_000,
     n_right: int | None = None,
 ) -> DataFrame:
     """Cell-partitioned Euclidean kNN for huge right sides (no broadcast):
@@ -378,8 +375,15 @@ def knn_cellwise(
     )
     return _knn_rings(
         left, right, k, grid, (left_id, left_x, left_y), (right_id, right_x, right_y),
-        max_rings, brute_threshold, brute_work, n_right,
+        n_right,
     )
+
+
+# ring escalation: at most MAX_RINGS widened rounds after round 1, then a
+# brute pass; read by _knn_rings at call time (see its adaptive exit)
+MAX_RINGS = 4
+BRUTE_THRESHOLD = 100_000  # violators the brute pass broadcasts at most
+BRUTE_WORK = 2_000_000_000  # violators x right rows the brute pass scores at most
 
 
 def _knn_rings(
@@ -389,9 +393,6 @@ def _knn_rings(
     grid: CellGrid,
     left_cols: tuple[str, str, str],
     right_cols: tuple[str, str, str],
-    max_rings: int,
-    brute_threshold: int,
-    brute_work: int,
     n_right: int | None,
 ) -> DataFrame:
     """Exact kNN by multi-round ring escalation on ``grid``.
@@ -403,7 +404,7 @@ def _knn_rings(
     violator set explodes into a (2r+1)^2 cell neighborhood — note the
     asymmetry: round 1 replicates the RIGHT side (every left row needs
     candidates), later rounds replicate the shrinking LEFT violator set
-    — with r doubling per round.  After ``max_rings`` doublings the
+    — with r doubling per round.  After ``MAX_RINGS`` doublings the
     remainder falls back to a distributed brute pass: every right
     partition scores the broadcast violators with ``grid.block`` and
     emits a partial top-k, then one final window.  Ties break on
@@ -482,9 +483,9 @@ def _knn_rings(
         n_right = right_c.count()
 
     def _go_brute(nr):
-        return nr <= brute_threshold and nr * n_right <= brute_work
+        return nr <= BRUTE_THRESHOLD and nr * n_right <= BRUTE_WORK
 
-    while rounds < max_rings and not _go_brute(n_rem) and n_rem > 0:
+    while rounds < MAX_RINGS and not _go_brute(n_rem) and n_rem > 0:
         # pair-uniqueness as in round 1: only the LEFT is ringed here, the
         # right sits in its home cell
         cells = grid.halo(remaining.drop("_cell"), left_id, left_x, left_y, r)
@@ -549,17 +550,6 @@ def _cell_shift_col(x, y, res: int, ox, oy):
     return cell_of_xy_col(x + ox * F.lit(s), y + oy * F.lit(s), res)
 
 
-def _in_domain_col(x, y, res: int):
-    """Both axis indices of (x, y) are in [0, 2^res) UNCLAMPED."""
-    from ..cells import DOMAIN_X0, DOMAIN_Y0, cell_size
-
-    s = F.lit(cell_size(res))
-    n = (1 << res) - 1
-    bx = F.floor((x - F.lit(DOMAIN_X0)) / s)
-    by = F.floor((y - F.lit(DOMAIN_Y0)) / s)
-    return (bx >= 0) & (bx <= n) & (by >= 0) & (by <= n)
-
-
 def _cell_shift_valid_col(x, y, res: int, ox, oy):
     """True when the (ox, oy)-shifted cell index is in-domain UNCLAMPED.
 
@@ -606,7 +596,7 @@ def _halo_replicas(df, id_col: str, x_col: str, y_col: str, r: int, *, res: int)
     x, y = F.col(x_col), F.col(y_col)
     exploded = df.withColumn("_o", F.explode(F.array(*_ring_offsets(r))))
     shift = _cell_shift_col(x, y, res, F.col("_o.ox"), F.col("_o.oy"))
-    in_dom = _in_domain_col(x, y, res)
+    in_dom = _cell_shift_valid_col(x, y, res, F.lit(0), F.lit(0))
     fast = (
         exploded.filter(
             in_dom & _cell_shift_valid_col(x, y, res, F.col("_o.ox"), F.col("_o.oy"))

@@ -135,9 +135,6 @@ def knn_cellwise_haversine(
     right_id: str = "vid",
     right_x: str = "px",
     right_y: str = "py",
-    max_rings: int = 4,
-    brute_threshold: int = 100_000,
-    brute_work: int = 2_000_000_000,
     n_right: int | None = None,
 ) -> DataFrame:
     """Exact great-circle kNN without broadcasting the right side.
@@ -167,5 +164,5 @@ def knn_cellwise_haversine(
         left.select(left_id, wrap_lon(left_x), left_y),
         right.select(right_id, wrap_lon(right_x), right_y),
         k, grid, (left_id, left_x, left_y), (right_id, right_x, right_y),
-        max_rings, brute_threshold, brute_work, n_right,
+        n_right,
     )

@@ -23,8 +23,7 @@ Plan shapes (the part that has to survive 10^12 pages):
 The synthetic corpus' pages carry no anchors (their html law predates
 this module and is pinned by the text-extraction oracles), so
 :func:`anchored_pages` appends a closed-form anchor block — same
-deterministic stance as ``linkgraph.link_edges``, mirrored term for
-term in :func:`anchored_pages_sql` so DuckDB parses byte-identical html.
+deterministic stance as ``linkgraph.link_edges``.
 
 Reference parity: no counterpart — the reference is a geospatial
 toolkit; this is north-star webtext surface (BASELINE input_hint pages
@@ -37,17 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ssb_sgis_spark.functions.url import host_col, host_sql
+from ssb_sgis_spark.functions.url import host_col
 from ssb_sgis_spark.operators.linkgraph import _A, _B
 
-__all__ = [
-    "anchored_pages",
-    "anchored_pages_sql",
-    "extract_links",
-    "extract_links_sql",
-    "host_edges",
-    "host_edges_sql",
-]
+__all__ = ["anchored_pages", "extract_links", "host_edges"]
 
 _HREF_RE = r'href="([^"]+)"'
 N_SITES = 1000  # the pages url law: host = site{uid % 1000}.no
@@ -80,22 +72,6 @@ def anchored_pages(df: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def anchored_pages_sql(pages_rel: str, html_expr: str) -> str:
-    """DuckDB mirror of :func:`anchored_pages`: SELECT-list expression
-    producing the same anchored html string from ``uid`` and the page
-    html expression ``html_expr``."""
-    a = (
-        "'<a href=\"https://site' || "
-        f"CAST((uid * {_A} + k * {_B}) % {N_SITES} AS VARCHAR) || "
-        "'.no/l/' || CAST(k AS VARCHAR) || '\">l' || CAST(k AS VARCHAR) || '</a>'"
-    )
-    return (
-        f"SELECT uid, url, ({html_expr}) || array_to_string("
-        f"list_transform(range(1, uid % 4 + 2), k -> {a}), '') AS html "
-        f"FROM {pages_rel}"
-    )
-
-
 def extract_links(
     df: DataFrame,
     html_col: str = "html",
@@ -116,16 +92,6 @@ def extract_links(
     )
 
 
-def extract_links_sql(rel: str, html_expr: str = "html", keep: str = "uid") -> str:
-    """DuckDB mirror: same regex, 0-based pos in document order."""
-    return f"""
-    SELECT {keep}, k - 1 AS pos, arr[k] AS href FROM (
-      SELECT {keep}, regexp_extract_all({html_expr}, '{_HREF_RE}', 1) AS arr
-      FROM {rel}
-    ) t, unnest(range(1, len(arr) + 1)) r(k)
-    """
-
-
 def host_edges(links: DataFrame, src_url_col: str = "url") -> DataFrame:
     """Contract page→page links to the weighted host graph:
     ``(src, dst, w)`` with w = number of links.  One map-side-combined
@@ -138,15 +104,6 @@ def host_edges(links: DataFrame, src_url_col: str = "url") -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count("*").alias("w"))
     )
-
-
-def host_edges_sql(links_rel: str, src_url: str = "url") -> str:
-    return f"""
-    SELECT {host_sql(src_url)} AS src, {host_sql('href')} AS dst,
-           count(*) AS w
-    FROM {links_rel}
-    GROUP BY 1, 2
-    """
 
 
 # --- anchor-TEXT index (the Common Crawl anchor-corpus artifact) ------

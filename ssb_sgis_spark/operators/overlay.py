@@ -296,12 +296,6 @@ def _detect_boxes(ga):
     return mask, x0, y0, x1, y1
 
 
-def _box_ring(x0, y0, x1, y1) -> np.ndarray:
-    return np.array(
-        [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], dtype=np.float64
-    )
-
-
 def _intersection(df1, df2, geometry_col, lmap, rmap, res, add_area=False, grid_size=None) -> DataFrame:
     pairs, _ = candidate_pairs(df1, df2, geometry_col, res)
     # parallelism comes from candidate_pairs' pre-explode repartition of

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _SNAPDIR = "_snapshots"
+_STAGED = re.compile(r"s(\d+)-")  # stage_snapshot_dir's s<N>-<uuid8>
 
 
 def _manifest_dir(path: str) -> str:
@@ -339,11 +341,17 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[int]:
     individual path, so a dropped snapshot's data directory may still
     hold files the surviving head reads.  Only parquet files in no kept
     snapshot's expanded file set are deleted; a directory is removed
-    whole only when none of its files are live."""
+    whole only when none of its files are live.
+
+    Every call also sweeps orphans (Iceberg's ``remove_orphan_files``):
+    a staged ``data/s<N>-…`` entry that no kept manifest reaches is
+    deleted when N is at most the head's id.  Under the single-writer
+    contract such a stage can never be committed; ``s<head+1>-…`` may
+    still be in flight and is left alone."""
     import shutil
 
     snaps = snapshots(path)
-    if len(snaps) <= keep_last:
+    if not snaps:
         return []
     tagged = set(snapshot_tags(path).values())
     keep = snaps[-keep_last:] + [
@@ -354,8 +362,6 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[int]:
         for m in snaps[:-keep_last]
         if m["snapshot_id"] not in tagged
     ]
-    if not drop:
-        return []
     live_dirs = {d for m in keep for d in m["data_dirs"]}
     live_files = {f for m in keep for f in _snapshot_files(m)}
     expired = []
@@ -386,6 +392,17 @@ def expire_snapshots(path: str, keep_last: int = 1) -> list[int]:
                         fp = os.path.join(root, fn)
                         if fn.endswith(".parquet") and fp not in live_files:
                             os.remove(fp)
+    data_root = os.path.abspath(os.path.join(path, "data"))
+    # top-level data/ entries a kept manifest lists, or holds a file under
+    reached = {
+        os.path.relpath(os.path.abspath(d), data_root).split(os.sep)[0]
+        for d in live_dirs
+    }
+    head_id = snaps[-1]["snapshot_id"]
+    for name in os.listdir(data_root) if os.path.isdir(data_root) else []:
+        staged = _STAGED.match(name)
+        if staged and int(staged.group(1)) <= head_id and name not in reached:
+            shutil.rmtree(os.path.join(data_root, name))
     return expired
 
 

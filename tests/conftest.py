@@ -1,4 +1,5 @@
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -23,3 +24,24 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(fn)`` -> (fn(), ids of the Spark jobs fn ran), read
+    from a job group of its own: the status store keeps finished jobs,
+    so a shared group id would also count an earlier call's jobs."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-during-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -7,7 +7,6 @@ import pytest
 from ssb_sgis_spark.kernels.boolean import polygon_area, union_all
 from ssb_sgis_spark.kernels.buffer import (
     buffer_parts,
-    buffer_point_np,
     disc,
     disc_area,
 )
@@ -83,17 +82,6 @@ def test_polygon_buffer_hole_shrinks_and_vanishes():
     # r=3: hole (4x4) vanishes entirely (thinner than 2r)
     out2 = buffer_parts([[ext, hole]], T_POLYGON, 3.0, quad_segs=20)
     assert len(out2) == 1 and len(out2[0]) == 1
-
-
-def test_buffer_point_np_vectorized():
-    x = np.array([0.0, 100.0])
-    y = np.array([0.0, 50.0])
-    rings = buffer_point_np(x, y, 5.0, quad_segs=8)
-    assert rings.shape == (2, 33, 2)
-    assert np.allclose(np.hypot(rings[0, :, 0], rings[0, :, 1]), 5.0)
-    assert np.allclose(
-        np.hypot(rings[1, :, 0] - 100.0, rings[1, :, 1] - 50.0), 5.0
-    )
 
 
 def _box(x0, y0, x1, y1):

@@ -124,10 +124,3 @@ def test_empty_batch():
     assert len(ga) == 0
     assert geom.area(ga).shape == (0,)
     assert geom.bounds(ga).shape == (0, 4)
-
-
-def test_planar_distance_formula():
-    # must equal sqrt((dx)*(dx)+(dy)*(dy)) exactly (the SQL oracle form)
-    x1, y1, x2, y2 = 1.1, 2.2, 3.3, 4.4
-    d = geom.planar_distance(np.array([x1]), np.array([y1]), np.array([x2]), np.array([y2]))
-    assert d[0] == np.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ssb_sgis_spark.kernels.geom import haversine_m
+from ssb_sgis_spark.operators import knn
 from ssb_sgis_spark.operators.knn_geo import knn_cellwise_haversine
 
 
@@ -60,16 +61,16 @@ def test_matches_numpy_brute_regional(spark):
     assert len(got) == 60 * 5
 
 
-def test_small_cells_force_escalation(spark):
+def test_small_cells_force_escalation(spark, monkeypatch):
     """Tiny cells → round 1 can't prove most rows → rings + brute paths
     both execute; result must stay exact."""
+    monkeypatch.setattr(knn, "MAX_RINGS", 2)
+    monkeypatch.setattr(knn, "BRUTE_THRESHOLD", 5)
     lid, llon, llat = _cloud(25, 3)
     rid, rlon, rlat = _cloud(120, 4)
     left = _mkdf(spark, lid, llon, llat, "uid", "x", "y")
     right = _mkdf(spark, rid, rlon, rlat, "vid", "px", "py")
-    got = knn_cellwise_haversine(
-        left, right, k=4, cell_deg=0.05, max_rings=2, brute_threshold=5
-    ).collect()
+    got = knn_cellwise_haversine(left, right, k=4, cell_deg=0.05).collect()
     _check(got, _np_brute(lid, llon, llat, rid, rlon, rlat, 4))
 
 

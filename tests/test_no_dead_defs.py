@@ -5,9 +5,10 @@ benchmark.  No Spark; every ``.py`` in the repo is lexed once.
 
 The lexer is one regex (comments, string literals, names) rather than
 ``tokenize``, which is ~5x slower over the repo.  A string literal counts
-as a reference when it is exactly an identifier (``__all__`` entries,
-``getattr(module, "name")``); an f-string counts every identifier in it,
-since its replacement fields are code.  Comments never count."""
+as a reference when it is exactly an identifier (``getattr(module,
+"name")``), except inside a module-level ``__all__``: exporting a def is
+not using it.  An f-string counts every identifier in it, since its
+replacement fields are code.  Comments never count."""
 
 import re
 import time
@@ -30,6 +31,7 @@ TOKEN = re.compile(
     re.X,
 )
 IDENT = re.compile(r"[A-Za-z_]\w*")
+ALL = re.compile(r"^__all__\s*\+?=\s*[\[(][^\])]*[\])]", re.M)
 
 
 def _scan():
@@ -42,6 +44,7 @@ def _scan():
             continue
         text = path.read_text()
         in_pkg = parts[0] == PACKAGE
+        exports = [m.span() for m in ALL.finditer(text)]
         after_def = False
         for m in TOKEN.finditer(text):
             name = m.group("name")
@@ -57,7 +60,9 @@ def _scan():
                 body = m.group("string").strip("\"'")
                 if "f" in m.group("prefix").lower():
                     refs.update(IDENT.findall(body))
-                elif IDENT.fullmatch(body):
+                elif IDENT.fullmatch(body) and not any(
+                    a <= m.start() < b for a, b in exports
+                ):
                     refs[body] += 1
     return refs, defs
 

@@ -236,24 +236,11 @@ def test_connected_components_evaluates_edges_once(spark):
     assert seen.value == 10
 
 
-def _jobs_during(spark, fn):
-    """(fn(), ids of the Spark jobs fn ran), read from a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup("jobs-during", "")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, list(sc.statusTracker().getJobIdsForGroup("jobs-during"))
-
-
 def _pair_ids(pairs):
     return {(r["aid"], r["bid__r"]) for r in pairs.select("aid", "bid__r").collect()}
 
 
-def test_candidate_pairs_plans_with_one_job_and_one_right_decode(spark, frames):
+def test_candidate_pairs_plans_with_one_job_and_one_right_decode(spark, frames, jobs_during):
     """Choosing the resolution and the broadcast runs one Spark job, and
     the right side's Python runs once in all: the join reads that job's
     checkpoint instead of re-running it."""
@@ -266,7 +253,7 @@ def test_candidate_pairs_plans_with_one_job_and_one_right_decode(spark, frames):
             yield pdf
 
     right = dfb.mapInPandas(count_rows, schema=dfb.schema)
-    (pairs, _), jobs = _jobs_during(spark, lambda: candidate_pairs(dfa, right))
+    (pairs, _), jobs = jobs_during(lambda: candidate_pairs(dfa, right))
     assert len(jobs) == 1
     pairs.count()
     assert seen.value == len(B)
@@ -312,6 +299,17 @@ def test_pairs_do_not_depend_on_resolution(spark, frames):
         assert _pair_ids(pairs) == exp_pairs
         edges = polygon_pair_edges(dfa, "aid", res=res).collect()
         assert {(r["src"], r["dst"]) for r in edges} == exp_edges
+
+
+def test_polygon_pair_edges_job_budget(spark, frames, jobs_during):
+    """The self-join plans with the one bounds pin when it picks the
+    resolution, and with no job when the resolution is given: the
+    shared candidate join adds no profile job of its own."""
+    _, _, dfa, _ = frames
+    for res, n_jobs in ((None, 1), (8, 0)):
+        edges, jobs = jobs_during(lambda: polygon_pair_edges(dfa, "aid", res=res))
+        assert len(jobs) == n_jobs
+        assert edges.count() > 0
 
 
 def test_cluster_points_within_distance_vs_union_find(spark):

@@ -147,19 +147,6 @@ def test_tiled_run_resume(spark, points, tmp_path):
     assert sorted(m["tiled_batch"] for m in man) == [0, 1, 2, 3]
 
 
-def _jobs_during(spark, fn):
-    """(fn(), ids of the Spark jobs fn ran), read from a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup("jobs-during", "")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, list(sc.statusTracker().getJobIdsForGroup("jobs-during"))
-
-
 def _tile_job(df):
     df = df.withColumn("tile", (F.col("uid") % 10).cast("long"))
 
@@ -213,7 +200,7 @@ def test_tiled_run_crash_before_commit(spark, points, tmp_path):
     assert got == sorted((r["uid"], r["tile"]) for r in job(tiles).collect())
 
 
-def test_tiled_run_resume_runs_no_jobs_and_is_a_snapshot_table(spark, points, tmp_path):
+def test_tiled_run_resume_runs_no_jobs_and_is_a_snapshot_table(spark, points, tmp_path, jobs_during):
     """A resume pass over a finished run reads JSON only, and the output
     is an ordinary snapshot table: one snapshot per batch, expirable."""
     _, _, df = points
@@ -225,8 +212,7 @@ def test_tiled_run_resume_runs_no_jobs_and_is_a_snapshot_table(spark, points, tm
         with run.record(b) as rec:
             rec.write(job(batch_tiles))
 
-    pending, jobs = _jobs_during(
-        spark,
+    pending, jobs = jobs_during(
         lambda: [b for b, _, done in TiledRun(spark, out).batches(tiles, 2) if not done],
     )
     assert pending == [] and jobs == []

@@ -11,6 +11,7 @@ from ssb_sgis_spark.sources.snapshots import (
     expire_snapshots,
     read_snapshot_table,
     snapshots,
+    stage_snapshot_dir,
     write_snapshot_table,
 )
 
@@ -81,6 +82,22 @@ def test_expire_snapshots_keeps_live_files(spark, tmp_path):
     assert read_snapshot_table(spark, t).count() == 30
     with pytest.raises(ValueError, match="no snapshot"):
         read_snapshot_table(spark, t, snapshot_id=1)
+
+
+def test_expire_snapshots_sweeps_orphaned_stages(spark, tmp_path):
+    """A stage no manifest ever listed (a writer that crashed before its
+    commit) is reclaimed by the next expiry; the in-flight id is not."""
+    t = str(tmp_path / "tbl")
+    write_snapshot_table(_mk(spark, 0, 5), t)
+    stage_snapshot_dir(_mk(spark, 100, 105), t)  # s2-…, never committed
+    write_snapshot_table(_mk(spark, 5, 10), t)
+    write_snapshot_table(_mk(spark, 10, 15), t)
+    in_flight = stage_snapshot_dir(_mk(spark, 200, 205), t)  # s4-…
+    assert expire_snapshots(t, keep_last=1) == [1, 2]
+    data = os.path.join(t, "data")
+    kept = {os.path.basename(d) for d in snapshots(t)[-1]["data_dirs"]}
+    assert set(os.listdir(data)) == kept | {os.path.basename(in_flight)}
+    assert read_snapshot_table(spark, t).count() == 15
 
 
 def test_unreadable_paths_raise(spark, tmp_path):
