@@ -14,12 +14,16 @@ driver-side graph nor a global STRtree exists, so:
   ``localCheckpoint`` that both join sides read, and the same job
   observes the median bbox span that picks ``res``, and
 * components are computed by **iterative hash-min label propagation with
-  pointer jumping** (label-of-label join each round → O(log diameter)
-  rounds), each round ``localCheckpoint``-ed to cut lineage — the
-  DataFrame equivalent of map-reduce CC (large-star/small-star family).
-  Every step flags the labels it lowered; an ``Observation`` on the
-  checkpoint job reads the flag, and the loop stops in the first round
-  whose last step lowered none.
+  pointer jumping** (label-of-label each step → O(log diameter)
+  rounds).  The induced symmetric edge list is pinned once, and an
+  ``Observation`` on that job counts it.  Below ``LOCAL_CC_MAX_EDGES``
+  rows the rounds run in numpy on the driver (the reference's
+  networkx scale) and the labels return as an Arrow-built
+  ``LocalRelation``; above it each round is a ``localCheckpoint``-ed
+  pair of shuffle steps — the DataFrame equivalent of map-reduce CC
+  (large-star/small-star family).  On both paths every step flags the
+  labels it lowered, and the loop stops in the first round whose last
+  step lowered none.
 
 ``cluster_points_within_distance`` is the point specialization used by
 buffdissexp-by-cluster pipelines on page points: buffering points by r and
@@ -31,6 +35,7 @@ no geometry ever materializes for the 10^12-point side.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -145,6 +150,11 @@ def point_pair_edges_within(
 
 
 # ---------------------------------------------------- connected components
+# symmetric edge rows below this are labelled on the driver, like the
+# reference's networkx path; larger graphs run the distributed rounds
+LOCAL_CC_MAX_EDGES = 1_000_000
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
@@ -158,32 +168,35 @@ def connected_components(
     with an endpoint missing from ``vertices`` joins nothing, and labels
     never propagate through such an endpoint.
 
-    Hash-min propagation + pointer jumping, localCheckpoint per round:
-    step = (label ← min(label, neighbors' labels)) ∘ (label ← label of
-    label), two steps per round.  Converges in O(log diameter) rounds;
-    each step is two shuffles on (id) — scale-safe, no driver-side graph
-    (unlike the reference's networkx path,
-    ``polygon_operations.py:147-155``).
+    Both directions of ``edges``, restricted to that induced subgraph,
+    are pinned by one ``localCheckpoint``; an ``Observation`` on that
+    job counts the symmetric rows (a retried stage can only over-count,
+    so the choice errs toward the distributed path).  Below
+    ``LOCAL_CC_MAX_EDGES`` rows the pin is collected and labelled on the
+    driver (:func:`_driver_labels`), and the labels come back as an
+    Arrow-built ``LocalRelation`` whose size the planner knows, so the
+    joins downstream broadcast it and no Python worker re-reads it.
+    Otherwise :func:`_distributed_labels` runs the same rounds as
+    shuffles.
 
-    Each step flags the vertices whose label it lowered; the loop stops
-    after the first round whose second step lowered none.  That is a
-    fixed point: both ends of every edge carry the same label, every
-    label is the id of a component member and never exceeds the vertex's
-    own id, so it is the component's min id.  The flag is read by an
-    ``Observation`` on the round's checkpoint job (``max`` is idempotent
-    under stage retries), so a round costs no extra action.
+    A round is two steps; a step is (label ← min(label, neighbors'
+    labels)) ∘ (label ← label of label).  Each step flags the vertices
+    whose label it lowered; the loop stops after the first round whose
+    second step lowered none.  That is a fixed point: both ends of every
+    edge carry the same label, every label is the id of a component
+    member and never exceeds the vertex's own id, so it is the
+    component's min id.  Converges in O(log diameter) rounds.
 
-    The iterative rounds run ONLY over edge-touched vertices; vertices
-    with no incident edge are self-labeled singletons unioned back
-    map-only at the end.  Output-identical, but per-round shuffle cost
-    is proportional to the component graph, not the vertex set — on a
-    near-duplicate graph over a web corpus the dup graph is orders of
-    magnitude smaller than the corpus, so this is the difference
-    between shuffling a trillion labels per round and shuffling the
-    few that are actually in play.
+    The rounds run ONLY over edge-touched vertices; vertices with no
+    incident edge are self-labeled singletons unioned back map-only at
+    the end.  Output-identical, but the per-round cost is proportional
+    to the component graph, not the vertex set — on a near-duplicate
+    graph over a web corpus the dup graph is orders of magnitude smaller
+    than the corpus.
 
     Raises ``RuntimeError`` when the labels still change in round
-    ``max_iter`` rather than returning unconverged components.
+    ``max_iter`` rather than returning unconverged components; both
+    paths count rounds alike.
     """
     # both directions from ONE evaluation of ``edges`` (a unionAll of two
     # selects would run the upstream pair join and refine twice)
@@ -195,19 +208,77 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.a", "_e.b")
-    sym = sym.localCheckpoint(eager=True)
     verts = vertices.select(F.col(id_col).alias("v"))
-    # edge-touched vertices only (∩ vertices, preserving the contract
-    # that output rows ⊆ the vertices frame even if edges mention ids
-    # outside it)
-    active = verts.join(
-        sym.select(F.col("a").alias("v")).distinct(), "v", "left_semi"
+    # the induced subgraph: output rows stay ⊆ the vertices frame even if
+    # edges mention ids outside it, and every ``a`` is a vertex
+    sym = (
+        sym.join(verts.select(F.col("v").alias("a")), "a", "left_semi")
+        .join(verts.select(F.col("v").alias("b")), "b", "left_semi")
+        .select("a", "b")
     )
-    labels = active.select(F.col("v"), F.col("v").alias("lbl"))
-    labels = labels.localCheckpoint(eager=True)
+    obs = Observation()
+    sym = sym.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    if obs.get["n"] < LOCAL_CC_MAX_EDGES:
+        labels = _driver_labels(sym, max_iter)
+    else:
+        labels = _distributed_labels(sym, max_iter)
     singletons = verts.join(labels.select("v"), "v", "left_anti").select(
         F.col("v"), F.col("v").alias("lbl")
     )
+    return labels.unionByName(singletons).select(
+        F.col("v").alias(id_col), F.col("lbl").alias(component_col)
+    )
+
+
+def _unconverged(max_iter: int) -> RuntimeError:
+    return RuntimeError(
+        f"connected_components did not converge within max_iter={max_iter}:"
+        f" labels still changed in round {max_iter}; raise max_iter"
+    )
+
+
+def _driver_labels(sym: DataFrame, max_iter: int) -> DataFrame:
+    """(v, lbl) of the pinned symmetric edges (a, b), labelled in numpy.
+    Ids are coded by ``np.unique``, whose sorted codes make the min code
+    the min id (string ids too: UTF-8 byte order, Spark's, is code-point
+    order, Python's).  A step is a hash-min over the edges
+    (``np.minimum.at``) then one pointer jump."""
+    t = sym.toArrow()
+    a, b = t.column("a").to_numpy(), t.column("b").to_numpy()
+    ids, codes = np.unique(np.concatenate([a, b]), return_inverse=True)
+    a, b = codes[: len(a)], codes[len(a) :]
+
+    def step(lbl):
+        nbr = lbl.copy()
+        np.minimum.at(nbr, a, lbl[b])
+        jumped = nbr[nbr]
+        return jumped, bool((nbr < lbl).any() or (jumped < nbr).any())
+
+    lbl = np.arange(len(ids))
+    for _ in range(max_iter):
+        lbl, _ = step(lbl)
+        lbl, chg = step(lbl)
+        if not chg:
+            break
+    else:
+        raise _unconverged(max_iter)
+    typ = sym.schema["a"].dataType
+    schema = T.StructType([T.StructField("v", typ), T.StructField("lbl", typ)])
+    # an Arrow table, not a pandas frame: pandas input becomes a
+    # Python-RDD scan of unknown size that every reader re-runs
+    return sym.sparkSession.createDataFrame(
+        pa.table({"v": ids, "lbl": ids[lbl]}), schema
+    )
+
+
+def _distributed_labels(sym: DataFrame, max_iter: int) -> DataFrame:
+    """(v, lbl) of the pinned symmetric edges (a, b): each step is two
+    shuffles on (id), each round ``localCheckpoint``-ed — scale-safe, no
+    driver-side graph.  The round's change flag is read by an
+    ``Observation`` on its checkpoint job (``max`` is idempotent under
+    stage retries), so a round costs no extra action."""
+    labels = sym.select(F.col("a").alias("v")).distinct()
+    labels = labels.select("v", F.col("v").alias("lbl")).localCheckpoint(eager=True)
 
     def step(lbls):
         """(v, lbl, ...) → (v, lbl, chg): chg marks a label this step lowered."""
@@ -247,15 +318,8 @@ def connected_components(
         )
         # NULL on an empty active set (no edges): nothing left to change
         if not obs.get["chg"]:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter}:"
-            f" labels still changed in round {max_iter}; raise max_iter"
-        )
-    return labels.unionByName(singletons).select(
-        F.col("v").alias(id_col), F.col("lbl").alias(component_col)
-    )
+            return labels
+    raise _unconverged(max_iter)
 
 
 def get_polygon_clusters(

@@ -114,11 +114,16 @@ def candidate_pairs(
     # run the explode, the join AND the downstream geometry kernel
     # single-threaded.  Repartitioning here moves each left geometry once
     # (pre-explode), vs repartitioning the pair table which moves both
-    # geometries per candidate pair.  Gated on the static partition
-    # count: a well-partitioned left frame (parquet scan, prior overlay
-    # in a chain) skips the extra full shuffle of its WKB payload.
+    # geometries per candidate pair.  A left plan with an Exchange is
+    # always spread: its partition count is only known after AQE runs
+    # the upstream stages, which ``rdd.getNumPartitions()`` would do
+    # here, at call time.  A shuffle-free plan is gated on its static
+    # partition count: a well-partitioned left frame (parquet scan,
+    # prior overlay in a chain) skips the extra full shuffle of its WKB
+    # payload.
     par = df1.sparkSession.sparkContext.defaultParallelism
-    if l.rdd.getNumPartitions() < par:
+    plan = l._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in plan or l.rdd.getNumPartitions() < par:
         l = l.repartition(par)
     lc = bbox_cells_exploded(l, res)
     rc = bbox_cells_exploded(

@@ -45,3 +45,19 @@ def jobs_during(spark):
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def cc_paths(monkeypatch):
+    """``for _ in cc_paths(): ...`` runs a test body on both
+    connected-components paths: the driver-side labels at the default
+    ``LOCAL_CC_MAX_EDGES``, then the distributed rounds with the bound
+    at 0 (a strict ``<``, so even an empty graph goes distributed)."""
+    from ssb_sgis_spark.operators import clusters
+
+    def paths():
+        for bound in (clusters.LOCAL_CC_MAX_EDGES, 0):
+            monkeypatch.setattr(clusters, "LOCAL_CC_MAX_EDGES", bound)
+            yield bound
+
+    return paths

@@ -9,6 +9,7 @@ from ssb_sgis_spark.kernels import wkb
 from ssb_sgis_spark.kernels.boolean import overlay_parts, polygon_area, union_all
 from ssb_sgis_spark.operators.dissolve import (
     buffdissexp,
+    buffdissexp_by_cluster,
     dissexp,
     dissexp_by_cluster,
 )
@@ -183,42 +184,46 @@ def test_buffdissexp_two_points_lens(spark):
     assert area == pytest.approx(2 * np.pi * r * r - lens, rel=2e-3)
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, cc_paths):
     """A 40-long chain converges via pointer jumping (far fewer than 40
     hash-min rounds)."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
     verts = spark.range(41).withColumnRenamed("id", "v").selectExpr("v as id")
-    comp = connected_components(edges, verts, id_col="id", max_iter=12)
-    rows = comp.collect()
-    assert all(r["component"] == 0 for r in rows)
+    for _ in cc_paths():
+        comp = connected_components(edges, verts, id_col="id", max_iter=12)
+        rows = comp.collect()
+        assert len(rows) == 41
+        assert all(r["component"] == 0 for r in rows)
 
 
-def test_connected_components_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark, cc_paths):
     """One round cannot settle a 40-node path: labels still change in
     the last round, so the call raises instead of returning them."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(39)], "src long, dst long"
     )
     verts = spark.range(40)
-    with pytest.raises(RuntimeError, match=r"max_iter=1\b.*round 1\b"):
-        connected_components(edges, verts, id_col="id", max_iter=1)
+    for _ in cc_paths():
+        with pytest.raises(RuntimeError, match=r"max_iter=1\b.*round 1\b"):
+            connected_components(edges, verts, id_col="id", max_iter=1)
 
 
-def test_connected_components_settling_round_is_last(spark):
+def test_connected_components_settling_round_is_last(spark, cc_paths):
     """Disjoint pairs settle in round 1 (its second step lowers no
     label), so ``max_iter=1`` suffices: no extra round just to confirm."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 20, 2)], "src long, dst long"
     )
     verts = spark.range(20)
-    comp = connected_components(edges, verts, id_col="id", max_iter=1)
-    got = {r["id"]: r["component"] for r in comp.collect()}
-    assert got == {i: i - i % 2 for i in range(20)}
+    for _ in cc_paths():
+        comp = connected_components(edges, verts, id_col="id", max_iter=1)
+        got = {r["id"]: r["component"] for r in comp.collect()}
+        assert got == {i: i - i % 2 for i in range(20)}
 
 
-def test_connected_components_evaluates_edges_once(spark):
+def test_connected_components_evaluates_edges_once(spark, cc_paths):
     """The edge frame (in real use a pair join + Python refine) is
     evaluated exactly once, not once per edge direction."""
     seen = spark.sparkContext.accumulator(0)
@@ -232,8 +237,9 @@ def test_connected_components_evaluates_edges_once(spark):
         [(i, i + 1) for i in range(0, 20, 2)], "src long, dst long"
     ).mapInPandas(count_rows, schema="src long, dst long")
     verts = spark.range(20)
-    connected_components(edges, verts, id_col="id").collect()
-    assert seen.value == 10
+    for calls, _ in enumerate(cc_paths(), 1):
+        connected_components(edges, verts, id_col="id").collect()
+        assert seen.value == 10 * calls
 
 
 def _pair_ids(pairs):
@@ -312,7 +318,50 @@ def test_polygon_pair_edges_job_budget(spark, frames, jobs_during):
         assert edges.count() > 0
 
 
-def test_cluster_points_within_distance_vs_union_find(spark):
+def test_candidate_pairs_with_res_and_broadcast_given_runs_no_job(spark, frames, jobs_during):
+    """With both plan choices given nothing runs at call time, even when
+    the left plan holds a shuffle (a ``distinct``): the left side is
+    spread without asking AQE for its partition count."""
+    _, _, dfa, _ = frames
+    d = dfa.distinct()
+    (pairs, _), jobs = jobs_during(
+        lambda: candidate_pairs(d, d, res=10, broadcast_right=False)
+    )
+    assert jobs == []
+    assert "Repartition" in pairs._jdf.queryExecution().analyzed().toString()
+
+    def ids(p):
+        return {(r["aid"], r["aid__r"]) for r in p.select("aid", "aid__r").collect()}
+
+    want, _ = candidate_pairs(dfa, dfa, res=10, broadcast_right=False)
+    assert ids(pairs) == ids(want)
+
+
+def test_connected_components_driver_path_job_budget(spark, jobs_during):
+    """On the driver path CC runs only the edge pin (with the jobs AQE
+    runs under it) and one collect, however many rounds the labels take;
+    the distributed rounds would add a checkpoint job per round."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    verts = spark.range(45)
+    comp, jobs = jobs_during(lambda: connected_components(edges, verts, id_col="id"))
+    assert len(jobs) <= 3
+    assert comp.count() == 45
+
+
+def test_buffdissexp_by_cluster_job_budget(spark, frames, jobs_during):
+    """Clustering before the dissolve runs a fixed number of eager jobs on
+    a small input: the ``_cid`` pin, the bounds pin, the edge pin and the
+    driver-side labels' collect, plus the jobs AQE runs for the shuffle
+    and broadcast stages under them."""
+    _, _, dfa, _ = frames
+    out, jobs = jobs_during(lambda: buffdissexp_by_cluster(dfa, 50.0))
+    assert len(jobs) <= 9
+    assert out.count() > 0
+
+
+def test_cluster_points_within_distance_vs_union_find(spark, cc_paths):
     rng = np.random.RandomState(5)
     n = 120
     xs = 250000.0 + rng.rand(n) * 20000
@@ -322,10 +371,10 @@ def test_cluster_points_within_distance_vs_union_find(spark):
         [(int(i), float(xs[i]), float(ys[i])) for i in range(n)],
         "uid long, x double, y double",
     )
-    got = {
-        r["uid"]: r["cluster"]
-        for r in cluster_points_within_distance(df, d, "uid").collect()
-    }
+    got = [
+        {r["uid"]: r["cluster"] for r in cluster_points_within_distance(df, d, "uid").collect()}
+        for _ in cc_paths()
+    ]
     # union-find oracle
     parent = list(range(n))
 
@@ -345,4 +394,4 @@ def test_cluster_points_within_distance_vs_union_find(spark):
         root = find(i)
         comp_min[root] = min(comp_min.get(root, i), i)
     exp = {i: comp_min[find(i)] for i in range(n)}
-    assert got == exp
+    assert got == [exp, exp]

@@ -175,7 +175,7 @@ def test_duplicate_polygon_keys_agree_across_paths(spark):
     assert rows(max_distance=1e-9) == want
 
 
-def test_connected_components_string_ids(spark):
+def test_connected_components_string_ids(spark, cc_paths):
     """String vertex ids must converge correctly (the decimal-cast
     fingerprint regression: NULL sums ended the loop after one round)."""
     from ssb_sgis_spark.operators.clusters import connected_components
@@ -186,24 +186,53 @@ def test_connected_components_string_ids(spark):
     verts = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("d",), ("x",), ("y",), ("lone",)], "id string"
     )
-    out = {r["id"]: r["component"] for r in connected_components(edges, verts).collect()}
-    assert out["a"] == out["b"] == out["c"] == out["d"] == "a"
-    assert out["x"] == out["y"] == "x"
-    assert out["lone"] == "lone"
+    for _ in cc_paths():
+        out = {r["id"]: r["component"] for r in connected_components(edges, verts).collect()}
+        assert out["a"] == out["b"] == out["c"] == out["d"] == "a"
+        assert out["x"] == out["y"] == "x"
+        assert out["lone"] == "lone"
 
 
-def test_connected_components_no_edges(spark):
+def test_connected_components_non_ascii_string_ids(spark, cc_paths):
+    """The min id of a non-ASCII component is Spark's string minimum on
+    both paths: the driver path's sorted codes must order ids like
+    Spark's UTF-8 byte order (code-point order, which differs from
+    UTF-16 order once an id leaves the BMP)."""
+    from pyspark.sql import functions as F
+
+    from ssb_sgis_spark.operators.clusters import connected_components
+
+    comps = [["é", "z", "Ø"], ["ｚ", "𝔸"], ["Åse", "Åsa", "Ære"], ["ß"]]
+    edges = spark.createDataFrame(
+        [(c[i], c[i + 1]) for c in comps for i in range(len(c) - 1)],
+        "src string, dst string",
+    )
+    verts = spark.createDataFrame([(v,) for c in comps for v in c], "id string")
+    per_comp = spark.createDataFrame(
+        [(i, v) for i, c in enumerate(comps) for v in c], "c int, s string"
+    ).groupBy("c").agg(F.min("s").alias("m"))
+    mins = {r["c"]: r["m"] for r in per_comp.collect()}
+    spark_min = {v: mins[i] for i, c in enumerate(comps) for v in c}
+    # U+FF5A < U+1D538 by code point, though its UTF-16 unit is larger
+    assert spark_min["𝔸"] == "ｚ" == min(["ｚ", "𝔸"])
+    for _ in cc_paths():
+        out = {r["id"]: r["component"] for r in connected_components(edges, verts).collect()}
+        assert out == spark_min
+
+
+def test_connected_components_no_edges(spark, cc_paths):
     """Empty edge set: every vertex is its own singleton component (the
     active-vertex loop runs zero rounds; singletons union back)."""
     from ssb_sgis_spark.operators.clusters import connected_components
 
     edges = spark.createDataFrame([], "src long, dst long")
     verts = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-    out = {r["id"]: r["component"] for r in connected_components(edges, verts).collect()}
-    assert out == {1: 1, 2: 2, 3: 3}
+    for _ in cc_paths():
+        out = {r["id"]: r["component"] for r in connected_components(edges, verts).collect()}
+        assert out == {1: 1, 2: 2, 3: 3}
 
 
-def test_connected_components_foreign_edge_ids(spark):
+def test_connected_components_foreign_edge_ids(spark, cc_paths):
     """Edges mentioning ids absent from the vertices frame: components
     are those of the subgraph induced on the vertices, so output rows
     stay ⊆ vertices and no label propagates through the foreign id."""
@@ -211,5 +240,7 @@ def test_connected_components_foreign_edge_ids(spark):
 
     edges = spark.createDataFrame([(1, 99), (99, 2)], "src long, dst long")
     verts = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-    rows = connected_components(edges, verts).collect()
-    assert {r["id"]: r["component"] for r in rows} == {1: 1, 2: 2, 3: 3}
+    for _ in cc_paths():
+        rows = connected_components(edges, verts).collect()
+        assert len(rows) == 3
+        assert {r["id"]: r["component"] for r in rows} == {1: 1, 2: 2, 3: 3}
