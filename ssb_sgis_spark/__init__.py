@@ -11,6 +11,10 @@ The top level mirrors the reference's flat ``import sgis as sg`` surface:
 reference user can switch with an import swap.
 """
 
+from . import _pyworker
+
+_pyworker.install_lazy_zipimport()
+
 from .cells import cell_of_xy_col, ssb_grid_id_col
 from .operators.ann import (
     ann_lsh_topk,

@@ -104,6 +104,19 @@ def test_all_distances_is_cross_product(spark, frames):
     assert out.count() == 10 * 50
 
 
+def test_knn_broadcast_job_budget(spark, frames, jobs_during):
+    """The broadcast path plans with the right side's count and its
+    driver collect, and runs the top-k kernel in a fixed few jobs; the
+    ceilings are the counts measured at ``local[4]`` on the cached
+    sf0.001 frames."""
+    left, right, lp, rp = frames
+    out, jobs = jobs_during(lambda: get_k_nearest_neighbors(left, right, k=K))
+    assert len(jobs) <= 3
+    rows, jobs = jobs_during(out.collect)
+    assert len(jobs) <= 2
+    assert len(rows) == len(lp) * K
+
+
 def _planar_outlier_case(spark, frames):
     """Pages vs the point cloud on the planar grid; the outlier sits far
     outside the cloud's bounding box."""

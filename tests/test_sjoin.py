@@ -99,6 +99,21 @@ def test_compact_cover_path_matches_enumerated(spark, truth):
     assert a == b
 
 
+def test_pip_join_cached_cover_job_budget(spark, truth, jobs_during):
+    """With the enumerated cover already built and cached (one warm-up
+    join materializes it), the join plans with no job and runs its
+    broadcast hash join in a fixed few; the ceiling is the count measured
+    at ``local[4]`` on sf0.001."""
+    uids, want = truth
+    pages, munis = pages_df(spark, SF), muni_df(spark)
+    points_in_polygons_join(pages, munis).count()
+    got, jobs = jobs_during(lambda: points_in_polygons_join(pages, munis))
+    assert jobs == []
+    rows, jobs = jobs_during(got.select("uid", "muni_id").collect)
+    assert len(jobs) <= 3
+    assert {(r["uid"], r["muni_id"]) for r in rows} == want
+
+
 def test_dense_polygon_bounded_predicate_width(spark, truth):
     """One 5,000-vertex polygon among the munis must NOT inflate the
     unrolled PIP predicate width globally: dense PARTIAL cells are
