@@ -18,7 +18,6 @@ Spark mapping (SURVEY §2.6):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -26,7 +25,7 @@ from pyspark.sql import types as T
 from ..kernels import wkb
 from ..kernels.boolean import union_all
 from ..kernels.buffer import DEFAULT_QUAD_SEGS, buffer_parts
-from .geomtable import make_all_singlepart
+from .geomtable import make_all_singlepart, map_geoms
 
 
 def buff(
@@ -36,24 +35,12 @@ def buff(
     geometry_col: str = "geometry",
 ) -> DataFrame:
     """Buffer every geometry (reference ``buff``, resolution=50 parity)."""
-    schema = df.schema
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            out = []
-            for g in range(len(ga)):
-                t = int(ga.types[g])
-                if t == wkb.T_EMPTY:
-                    out.append(None)
-                    continue
-                parts = buffer_parts(ga.geom_parts(g), t, distance, quad_segs)
-                out.append(wkb.encode_geom(parts, wkb.T_POLYGON) if parts else None)
-            o = pdf.copy()
-            o[geometry_col] = out
-            yield o
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(
+        df,
+        lambda parts, t: buffer_parts(parts, t, distance, quad_segs),
+        geometry_col,
+        out_type=wkb.T_POLYGON,
+    )
 
 
 def dissolve(
@@ -100,10 +87,7 @@ def dissolve(
         return row
 
     grouped = df.groupBy(*bycols) if bycols else df.groupBy(F.lit(1).alias("_g"))
-    res = grouped.applyInPandas(
-        kernel if bycols else (lambda key, pdf: kernel(key, pdf)), schema=schema
-    )
-    return res
+    return grouped.applyInPandas(kernel, schema=schema)
 
 
 def dissexp(

@@ -4,7 +4,10 @@ These are the DataFrame-native equivalents of the reference's hygiene /
 bookkeeping layer (``sgis/geopandas_tools/general.py:137-222`` clean_geoms,
 ``geometry_types.py:10-22`` make_all_singlepart, ``bounds.py:375-510``).
 Geometry stays WKB ``binary``; decode happens once per Arrow batch inside
-``mapInPandas`` (vectorized numpy kernels — no per-row Python).
+``mapInPandas`` (vectorized numpy kernels — no per-row Python).  Per-row
+geometry UDFs take one of two shapes, each written once here:
+:func:`map_geoms` rewrites the geometry column and :func:`with_geom_cols`
+appends columns measured from it.
 
 The bbox **cell cover** here is the scale-critical piece: after one
 decode pass materializes (minx, miny, maxx, maxy) as native columns, the
@@ -21,7 +24,6 @@ the join reads that checkpoint.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,6 +31,56 @@ from pyspark.sql import types as T
 from ..cells import cell_index_col, cell_size, MAX_RES, DOMAIN_SIZE
 from ..kernels import wkb
 from ..kernels.geom import area as geom_area, bounds as geom_bounds, length as geom_length
+
+
+def map_geoms(
+    df: DataFrame, fn, geometry_col: str = "geometry", out_type: int | None = None
+) -> DataFrame:
+    """Batch-apply ``fn(parts, logical_type) -> parts | None`` per row.
+
+    Results are encoded as ``out_type``, or as the row's own type when it
+    is None.  An EMPTY row, or a None / empty ``fn`` result, gives NULL."""
+    schema = df.schema
+
+    def kernel(it):
+        for pdf in it:
+            ga = wkb.decode(pdf[geometry_col].tolist())
+            out = []
+            for g in range(len(ga)):
+                t = int(ga.types[g])
+                if t == wkb.T_EMPTY:
+                    out.append(None)
+                    continue
+                parts = fn(ga.geom_parts(g), t)
+                out.append(
+                    wkb.encode_geom(parts, t if out_type is None else out_type)
+                    if parts
+                    else None
+                )
+            o = pdf.copy()
+            o[geometry_col] = out
+            yield o
+
+    return df.mapInPandas(kernel, schema=schema)
+
+
+def with_geom_cols(
+    df: DataFrame, fn, fields: list[T.StructField], geometry_col: str = "geometry"
+) -> DataFrame:
+    """Append one column per ``fields`` entry.  ``fn(GeomArray)`` returns
+    those columns' values for each decoded Arrow batch, in field order."""
+    schema = T.StructType(df.schema.fields + list(fields))
+    names = [f.name for f in fields]
+
+    def kernel(it):
+        for pdf in it:
+            cols = fn(wkb.decode(pdf[geometry_col].tolist()))
+            o = pdf.copy()
+            for name, col in zip(names, cols):
+                o[name] = col
+            yield o
+
+    return df.mapInPandas(kernel, schema=schema)
 
 
 def with_bounds(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
@@ -41,51 +93,20 @@ def with_bounds(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     ~10x the equivalent native projection (measured at sf0.1)."""
     if all(c in df.columns for c in ("minx", "miny", "maxx", "maxy")):
         return df
-    fields = df.schema.fields + [
-        T.StructField(c, T.DoubleType()) for c in ("minx", "miny", "maxx", "maxy")
-    ]
-    schema = T.StructType(fields)
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            bb = geom_bounds(ga)
-            out = pdf.copy()
-            out["minx"], out["miny"], out["maxx"], out["maxy"] = (
-                bb[:, 0],
-                bb[:, 1],
-                bb[:, 2],
-                bb[:, 3],
-            )
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
+    fields = [T.StructField(c, T.DoubleType()) for c in ("minx", "miny", "maxx", "maxy")]
+    return with_geom_cols(df, lambda ga: geom_bounds(ga).T, fields, geometry_col)
 
 
 def with_area(df: DataFrame, geometry_col: str = "geometry", out: str = "area") -> DataFrame:
-    fields = df.schema.fields + [T.StructField(out, T.DoubleType())]
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            o = pdf.copy()
-            o[out] = geom_area(ga)
-            yield o
-
-    return df.mapInPandas(kernel, schema=T.StructType(fields))
+    return with_geom_cols(
+        df, lambda ga: [geom_area(ga)], [T.StructField(out, T.DoubleType())], geometry_col
+    )
 
 
 def with_length(df: DataFrame, geometry_col: str = "geometry", out: str = "length") -> DataFrame:
-    fields = df.schema.fields + [T.StructField(out, T.DoubleType())]
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            o = pdf.copy()
-            o[out] = geom_length(ga)
-            yield o
-
-    return df.mapInPandas(kernel, schema=T.StructType(fields))
+    return with_geom_cols(
+        df, lambda ga: [geom_length(ga)], [T.StructField(out, T.DoubleType())], geometry_col
+    )
 
 
 def xy_to_point_wkb(

@@ -90,34 +90,16 @@ def make_ssb_grid(
 def bounds_to_polygon(df: DataFrame) -> DataFrame:
     """Envelope WKB per row from (minx, miny, maxx, maxy) columns
     (``bounds.py:375-410``).  Arrow-batched numpy encode."""
-    import pandas as pd
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     schema = StructType(df.schema.fields + [StructField("geometry", BinaryType())])
 
     def kernel(iterator):
         for pdf in iterator:
-            geoms = [
-                wkb.encode_polygon(
-                    [
-                        np.array(
-                            [
-                                (x0, y0),
-                                (x1, y0),
-                                (x1, y1),
-                                (x0, y1),
-                                (x0, y0),
-                            ],
-                            dtype=np.float64,
-                        )
-                    ]
-                )
-                for x0, y0, x1, y1 in zip(
-                    pdf["minx"], pdf["miny"], pdf["maxx"], pdf["maxy"]
-                )
-            ]
             pdf = pdf.copy()
-            pdf["geometry"] = geoms
+            pdf["geometry"] = wkb.encode_boxes(
+                pdf["minx"], pdf["miny"], pdf["maxx"], pdf["maxy"]
+            )
             yield pdf
 
     return df.mapInPandas(kernel, schema=schema)

@@ -28,33 +28,26 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..kernels import wkb
 from ..kernels.graph import Adjacency, dijkstra
+from .geomtable import with_geom_cols, with_length
 
 
 # --------------------------------------------------------------- node prep
 def make_edge_coords_cols(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """First/last vertex per line as (x0, y0, x1, y1) columns
     (``nodes.py:97-150``)."""
-    fields = df.schema.fields + [
-        T.StructField(c, T.DoubleType()) for c in ("x0", "y0", "x1", "y1")
-    ]
 
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            n = len(ga)
-            out = pdf.copy()
-            a = np.full((n, 4), np.nan)
-            for g in range(n):
-                rings = ga.geom_rings(g)
-                if rings:
-                    a[g, 0], a[g, 1] = rings[0][0]
-                    a[g, 2], a[g, 3] = rings[-1][-1]
-            out["x0"], out["y0"], out["x1"], out["y1"] = a.T
-            yield out
+    def endpoints(ga):
+        a = np.full((len(ga), 4), np.nan)
+        for g in range(len(ga)):
+            rings = ga.geom_rings(g)
+            if rings:
+                a[g, :2] = rings[0][0]
+                a[g, 2:] = rings[-1][-1]
+        return a.T
 
-    return df.mapInPandas(kernel, schema=T.StructType(fields))
+    fields = [T.StructField(c, T.DoubleType()) for c in ("x0", "y0", "x1", "y1")]
+    return with_geom_cols(df, endpoints, fields, geometry_col)
 
 
 def make_node_ids(df: DataFrame, geometry_col: str = "geometry") -> tuple[DataFrame, DataFrame]:
@@ -671,8 +664,6 @@ def precice_service_area(
     whole = j.filter(F.col("_tgt_in").isNotNull()).select(
         origin_id, "break_val", "source", "target", geometry_col
     )
-    from .geomtable import with_length
-
     partly = (
         j.filter(F.col("_tgt_in").isNull())
         .withColumn("_remaining", F.col("break_val") - F.col("_cost_src"))

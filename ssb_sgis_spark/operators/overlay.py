@@ -195,16 +195,8 @@ def clean_overlay(
     def typed_null(dt):
         return F.lit(None).cast(dt)
 
-    rtypes = {
-        rmap[f.name]: f.dataType
-        for f in df2.schema.fields
-        if f.name != geometry_col and f.name not in _BOUNDS
-    }
-    ltypes = {
-        lmap[f.name]: f.dataType
-        for f in df1.schema.fields
-        if f.name != geometry_col and f.name not in _BOUNDS
-    }
+    rtypes = _col_types(df2, rmap, geometry_col)
+    ltypes = _col_types(df1, lmap, geometry_col)
 
     if how == "intersection":
         return _intersection(df1, df2, geometry_col, lmap, rmap, res, add_area, grid_size)
@@ -239,17 +231,22 @@ def clean_overlay(
 
 
 # ------------------------------------------------------------------ kernels
+def _col_types(df, cmap, geometry_col):
+    """Output name -> type of ``df``'s attribute columns, renamed by ``cmap``."""
+    return {
+        cmap[f.name]: f.dataType
+        for f in df.schema.fields
+        if f.name != geometry_col and f.name not in _BOUNDS
+    }
+
+
 def _out_schema(df1, df2, geometry_col, lmap, rmap, sides="both"):
-    fields = []
-    for f in df1.schema.fields:
-        if f.name != geometry_col and f.name not in _BOUNDS:
-            fields.append(T.StructField(lmap[f.name], f.dataType))
+    cols = list(_col_types(df1, lmap, geometry_col).items())
     if sides == "both":
-        for f in df2.schema.fields:
-            if f.name != geometry_col and f.name not in _BOUNDS:
-                fields.append(T.StructField(rmap[f.name], f.dataType))
-    fields.append(T.StructField("geometry", T.BinaryType()))
-    return T.StructType(fields)
+        cols += _col_types(df2, rmap, geometry_col).items()
+    return T.StructType(
+        [T.StructField(c, dt) for c, dt in cols] + [T.StructField("geometry", T.BinaryType())]
+    )
 
 
 def _detect_boxes(ga):
@@ -418,16 +415,8 @@ def _symdiff(df1, df2, geometry_col, lmap, rmap, res, left_id=None, right_id=Non
     reference ``overlay.py:320-335`` + ``:388-396``."""
     left = _difference(df1, df2, geometry_col, lmap, res, left_id, grid_size)
     right = _difference(df2, df1, geometry_col, dict(rmap), res, right_id, grid_size)
-    rtypes = {
-        rmap[f.name]: f.dataType
-        for f in df2.schema.fields
-        if f.name != geometry_col and f.name not in _BOUNDS
-    }
-    ltypes = {
-        lmap[f.name]: f.dataType
-        for f in df1.schema.fields
-        if f.name != geometry_col and f.name not in _BOUNDS
-    }
+    rtypes = _col_types(df2, rmap, geometry_col)
+    ltypes = _col_types(df1, lmap, geometry_col)
     for c in rmap.values():
         left = left.withColumn(c, F.lit(None).cast(rtypes[c]))
     for c in lmap.values():

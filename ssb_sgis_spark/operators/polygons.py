@@ -15,36 +15,13 @@ from pyspark.sql import types as T
 
 from ..kernels import wkb
 from ..kernels.boolean import ring_signed_area
-from ..kernels.geom import area as geom_area, length as geom_length, ring_edges
-
-
-def _map_geoms(df: DataFrame, fn, geometry_col: str = "geometry") -> DataFrame:
-    """Batch-apply ``fn(parts, logical_type) -> parts | None`` per row."""
-    schema = df.schema
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            out = []
-            for g in range(len(ga)):
-                t = int(ga.types[g])
-                if t == wkb.T_EMPTY:
-                    out.append(None)
-                    continue
-                parts = fn(ga.geom_parts(g), t)
-                out.append(
-                    wkb.encode_geom(parts, t) if parts else None
-                )
-            o = pdf.copy()
-            o[geometry_col] = out
-            yield o
-
-    return df.mapInPandas(kernel, schema=schema)
+from ..kernels.geom import centroid as geom_centroid, ring_edges
+from .geomtable import make_all_singlepart, map_geoms, with_area, with_geom_cols, with_length
 
 
 def close_all_holes(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Drop every interior ring (reference ``polygon_operations.py:523-601``)."""
-    return _map_geoms(
+    return map_geoms(
         df, lambda parts, t: [rings[:1] for rings in parts] if t == wkb.T_POLYGON else parts,
         geometry_col,
     )
@@ -65,7 +42,7 @@ def close_small_holes(
             for rings in parts
         ]
 
-    return _map_geoms(df, fn, geometry_col)
+    return map_geoms(df, fn, geometry_col)
 
 
 def close_thin_holes(
@@ -93,7 +70,7 @@ def close_thin_holes(
             out.append(kept)
         return out
 
-    return _map_geoms(df, fn, geometry_col)
+    return map_geoms(df, fn, geometry_col)
 
 
 def get_holes(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
@@ -160,7 +137,6 @@ def to_lines_split(*dfs: DataFrame, geometry_col: str = "geometry") -> DataFrame
     re-emits the split polyline pieces.  Lines with no cross-frame
     candidates pass through untouched (anti-join, no Python)."""
     from ..kernels.boolean import _seg_intersections
-    from .geomtable import make_all_singlepart
     from .overlay import candidate_pairs
 
     if not dfs:
@@ -281,23 +257,7 @@ def bounds_to_points(df: DataFrame, geometry_col: str = "geometry") -> DataFrame
         pts = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
         return [[pts[i : i + 1]] for i in range(4)]
 
-    schema = df.schema
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            out = []
-            for g in range(len(ga)):
-                if ga.types[g] == wkb.T_EMPTY:
-                    out.append(None)
-                    continue
-                parts = fn(ga.geom_parts(g), int(ga.types[g]))
-                out.append(wkb.encode_geom(parts, wkb.T_POINT))
-            o = pdf.copy()
-            o[geometry_col] = out
-            yield o
-
-    return df.mapInPandas(kernel, schema=schema)
+    return map_geoms(df, fn, geometry_col, out_type=wkb.T_POINT)
 
 
 # -------------------------------------------------------- type discipline
@@ -306,16 +266,12 @@ _TYPE_NAMES = {wkb.T_EMPTY: "empty", wkb.T_POINT: "point", wkb.T_LINE: "line", w
 
 def with_geom_type(df: DataFrame, geometry_col: str = "geometry", out: str = "geom_type") -> DataFrame:
     """Logical type class per row (reference ``geometry_types.py:130-172``)."""
-    fields = df.schema.fields + [T.StructField(out, T.StringType())]
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            o = pdf.copy()
-            o[out] = [_TYPE_NAMES[int(t)] for t in ga.types]
-            yield o
-
-    return df.mapInPandas(kernel, schema=T.StructType(fields))
+    return with_geom_cols(
+        df,
+        lambda ga: [[_TYPE_NAMES[int(t)] for t in ga.types]],
+        [T.StructField(out, T.StringType())],
+        geometry_col,
+    )
 
 
 def to_single_geom_type(
@@ -333,33 +289,13 @@ def to_single_geom_type(
 def sort_large_first(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Order by area desc (reference ``general.py:244-309``) — used before
     update_geometries."""
-    schema = T.StructType(df.schema.fields + [T.StructField("_area", T.DoubleType())])
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            o = pdf.copy()
-            o["_area"] = geom_area(ga)
-            yield o
-
-    return df.mapInPandas(kernel, schema=schema).orderBy(F.desc("_area")).drop("_area")
+    return with_area(df, geometry_col, "_area").orderBy(F.desc("_area")).drop("_area")
 
 
 def sort_long_first(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Order by line length desc (reference ``general.py:244-309``,
     ``sort_long_first``)."""
-    from ..kernels.geom import length as geom_length
-
-    schema = T.StructType(df.schema.fields + [T.StructField("_len", T.DoubleType())])
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            o = pdf.copy()
-            o["_len"] = geom_length(ga)
-            yield o
-
-    return df.mapInPandas(kernel, schema=schema).orderBy(F.desc("_len")).drop("_len")
+    return with_length(df, geometry_col, "_len").orderBy(F.desc("_len")).drop("_len")
 
 
 def sort_nans_last(df: DataFrame) -> DataFrame:
@@ -389,22 +325,12 @@ def get_grouped_centroids(
     225-241``: centroid of each geometry, dissolved per group, centroid
     again — i.e. the mean of member centroids).  Appends ``out`` as an
     "{int(x)}_{int(y)}" string (or x/y columns when as_string=False)."""
-    from ..kernels.geom import centroid as geom_centroid
-
-    cent_schema = T.StructType(
-        df.schema.fields
-        + [T.StructField("_cx", T.DoubleType()), T.StructField("_cy", T.DoubleType())]
+    withc = with_geom_cols(
+        df,
+        lambda ga: geom_centroid(ga).T,
+        [T.StructField("_cx", T.DoubleType()), T.StructField("_cy", T.DoubleType())],
+        geometry_col,
     )
-
-    def kernel(it):
-        for pdf in it:
-            ga = wkb.decode(pdf[geometry_col].tolist())
-            c = geom_centroid(ga)
-            o = pdf.copy()
-            o["_cx"], o["_cy"] = c[:, 0], c[:, 1]
-            yield o
-
-    withc = df.mapInPandas(kernel, schema=cent_schema)
     groups = withc.groupBy(groupby).agg(
         F.avg("_cx").alias("_gx"), F.avg("_cy").alias("_gy")
     )
@@ -434,8 +360,6 @@ def get_rough_centerlines(
     polygons (too few samples) get their centroid as a point, like the
     reference's circle fallback.  One Arrow batch pass; no pairwise work
     across rows."""
-    from ..kernels.geom import centroid as geom_centroid
-
     schema = df.schema
 
     def densify(ring: np.ndarray, h: float) -> np.ndarray:
@@ -541,7 +465,7 @@ def simplify(
                 out_parts.append(new_rings)
         return out_parts or None
 
-    return _map_geoms(df, fn, geometry_col)
+    return map_geoms(df, fn, geometry_col)
 
 
 def segmentize(
@@ -564,4 +488,4 @@ def segmentize(
             for rings in parts
         ]
 
-    return _map_geoms(df, fn, geometry_col)
+    return map_geoms(df, fn, geometry_col)

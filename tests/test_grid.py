@@ -49,10 +49,12 @@ def test_total_bounds(spark):
 
 
 def test_bounds_to_polygon_roundtrip(spark):
-    df = spark.createDataFrame(
-        [(1.0, 2.0, 11.0, 22.0)], "minx double, miny double, maxx double, maxy double"
-    )
+    rows = [(1.0, 2.0, 11.0, 22.0), (-3.5, 250000.25, 0.0, 6600000.5)]
+    df = spark.createDataFrame(rows, "minx double, miny double, maxx double, maxy double")
     out = bounds_to_polygon(df).toPandas()
     ga = wkb.decode(list(out["geometry"]))
     assert np.allclose(geom.bounds(ga)[0], [1, 2, 11, 22])
     assert np.allclose(geom.area(ga)[0], 200.0)
+    for (x0, y0, x1, y1), got in zip(rows, out["geometry"]):
+        ring = np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)])
+        assert bytes(got) == wkb.encode_polygon([ring])

@@ -225,6 +225,26 @@ def test_tiled_run_resume_runs_no_jobs_and_is_a_snapshot_table(spark, points, tm
     assert read_snapshot_table(spark, out).count() == df.count()
 
 
+def test_tiled_run_batch_job_budget(spark, points, tmp_path, jobs_during):
+    """Job budget of one TiledRun batch: a write plus its commit runs the
+    write's job and the jobs of the row-count/checksum read of the landed
+    files; the commit itself writes JSON only.  Ceiling (3) measured at
+    local[4] when the budget landed."""
+    _, _, df = points
+    job = _tile_job(df)
+    run = TiledRun(spark, str(tmp_path / "run"))
+
+    def batch():
+        with run.record(0) as rec:
+            rec.write(job([0, 2, 4, 6, 8]))
+        return rec.n_rows
+
+    n_rows, jobs = jobs_during(batch)
+    assert n_rows == job([0, 2, 4, 6, 8]).count()
+    assert run.done_batches() == {0}
+    assert len(jobs) <= 3
+
+
 def test_partition_metrics(spark, points):
     _, _, df = points
     m = partition_metrics(df.repartition(6), key_col="uid").collect()

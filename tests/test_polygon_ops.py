@@ -6,13 +6,14 @@ from pyspark.sql import functions as F
 
 from ssb_sgis_spark.kernels import wkb
 from ssb_sgis_spark.kernels.boolean import polygon_area
-from ssb_sgis_spark.kernels.geom import length as geom_length
+from ssb_sgis_spark.kernels.geom import area as geom_area, length as geom_length
 from ssb_sgis_spark.operators.clip import (
     clean_clip,
     get_gaps,
     get_intersections,
     update_geometries,
 )
+from ssb_sgis_spark.operators.geomtable import with_area, with_bounds, with_length
 from ssb_sgis_spark.operators.lineops import (
     cut_lines,
     cut_lines_once,
@@ -20,6 +21,7 @@ from ssb_sgis_spark.operators.lineops import (
 )
 from ssb_sgis_spark.operators.pointops import snap_all, snap_within_distance
 from ssb_sgis_spark.operators.polygons import (
+    bounds_to_points,
     close_all_holes,
     close_small_holes,
     get_holes,
@@ -518,3 +520,35 @@ def test_simplify_polygon_removes_collinear_keeps_area(spark):
     r = back.geom_rings(0)[0]
     assert len(r) == 5  # the 4 corners + closure: all inserted vertices gone
     assert abs(polygon_area([[r]]) - 10000.0) < 1e-6
+
+
+def test_bounds_to_points_and_measured_columns(spark):
+    line = np.array([(OX, OY), (OX + 30.0, OY + 40.0), (OX + 30.0, OY + 100.0)])
+    geoms = [
+        donut_wkb(OX, OY, 1000, 100),
+        wkb.encode_linestring(line),
+        wkb.encode_point(OX + 1.5, OY - 2.5),
+        None,
+    ]
+    df = spark.createDataFrame(
+        [(i, bytearray(g) if g is not None else None) for i, g in enumerate(geoms)],
+        "pid long, geometry binary",
+    )
+
+    pts = {r["pid"]: r["geometry"] for r in bounds_to_points(df).collect()}
+    assert pts[3] is None
+    corners = wkb.decode([pts[1]])
+    assert int(corners.types[0]) == wkb.T_POINT
+    got = [tuple(p[0][0]) for p in corners.geom_parts(0)]
+    x0, y0, x1, y1 = OX, OY, OX + 30.0, OY + 100.0
+    assert got == [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+    assert bytes(pts[1]) == wkb.encode_multipoint(np.array(got))
+
+    ga = wkb.decode(geoms)
+    measured = with_length(with_area(df), out="len").orderBy("pid").collect()
+    assert [r["area"] for r in measured] == list(geom_area(ga))
+    assert [r["len"] for r in measured] == list(geom_length(ga))
+
+    empty = with_bounds(df.limit(0))
+    assert empty.columns == ["pid", "geometry", "minx", "miny", "maxx", "maxy"]
+    assert empty.count() == 0
